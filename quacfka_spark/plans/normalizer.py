@@ -64,6 +64,8 @@ class NormalizerSpec:
     aliases: list[str]
     fail_on_range_error: bool = False
     _paths: list[list[_Segment]] = field(init=False, repr=False)
+    # (input schema, explode column or None, output columns), see apply
+    _compiled: tuple | None = field(default=None, init=False, repr=False, compare=False)
 
     def __post_init__(self) -> None:
         if len(self.fields) != len(self.aliases):
@@ -125,13 +127,26 @@ class NormalizerSpec:
         explode_outer reproduces the reference's empty-list handling: a
         NULL row is emitted so the scalar columns survive
         (README.md:119-130 ``AppendNull`` on empty ``deals``).
+
+        The compiled columns are kept for the last input schema: a
+        streaming epoch applies the same spec to the same schema every
+        time, and each Column call is a py4j round trip. One entry keeps
+        the cache bounded under schema drift; a new schema recompiles.
         """
-        prefix = self._explode_prefix(df.schema)
-        if prefix is not None:
-            df = df.withColumn("__norm_exploded", F.explode_outer(self._fold(prefix, None)))
-        cols: list[Column] = []
-        for path, alias in zip(self._paths, self.aliases):
-            cols.append(self._compile_path(path, prefix).alias(alias))
+        schema = df.schema
+        if self._compiled is None or self._compiled[0] != schema:
+            prefix = self._explode_prefix(schema)
+            explode = (
+                F.explode_outer(self._fold(prefix, None)) if prefix is not None else None
+            )
+            cols = [
+                self._compile_path(path, prefix).alias(alias)
+                for path, alias in zip(self._paths, self.aliases)
+            ]
+            self._compiled = (schema, explode, cols)
+        _, explode, cols = self._compiled
+        if explode is not None:
+            df = df.withColumn("__norm_exploded", explode)
         return df.select(*cols)
 
     def _compile_path(

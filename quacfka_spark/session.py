@@ -1,7 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config here is chosen to survive a 1000-executor cluster at 100 TB:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on) with ``$SPARK_GRAFT_DRIVER_MEM`` of driver heap
+(default: half the memory available at start), but every config here is
+chosen to survive a 1000-executor cluster at 100 TB:
 
 - AQE on (runtime coalesce, skew-join splitting, dynamic broadcast) so the
   same declarative plans re-optimize at any scale.
@@ -23,7 +25,16 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of ``MemAvailable``."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    with open("/proc/meminfo") as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemAvailable:"))
+    return f"{kb // 2048}m"  # half, in MB
 
 
 def get_spark(app_name: str = "quacfka-spark", extra_conf: dict | None = None) -> SparkSession:
@@ -37,7 +48,7 @@ def get_spark(app_name: str = "quacfka-spark", extra_conf: dict | None = None) -
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # Hot codegen workloads (wide from_json, large expression trees)
         # overflow the JVM's default 240MB code cache, after which the
         # JIT thrashes: identical decode jobs measured 10s -> 71s -> 1s

@@ -15,6 +15,9 @@ Reference mapping (SURVEY.md §2a):
   fixed-count alternative.
 - D17 rotation loop: write -> post-SQL -> publish path -> next epoch,
   with checkpointing replacing manual file reopen (duck.go:252-295).
+  The dedup ledgers are written on one side thread that overlaps the
+  derived sinks and the post-SQL, as the reference's K inserters overlap
+  (duck.go:299-546); the epoch joins it before it publishes any path.
 - D18 ``SQLRunner``: ordered SQL on each completed epoch, exec mode or
   callback mode, optional delete-when-done (duck.go:38-134).
 - D20 completed-path feed: in-process list + JSONL control log replaces
@@ -43,10 +46,13 @@ import json
 import os
 import threading
 import time
-from collections import OrderedDict
+from collections import OrderedDict, deque
 from collections.abc import Callable
+from concurrent.futures import Future
 from dataclasses import dataclass, field
+from functools import cached_property
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -424,8 +430,11 @@ class StreamingPipeline:
         # decomposes the per-micro-batch fixed cost: the gap between
         # epoch N's exit and N+1's enter is engine-side (offset WAL,
         # source planning, commit log); the in-batch split shows where
-        # addBatch's own time goes. Cost: one small dict per epoch.
-        self.epoch_trace: list[dict] = []
+        # addBatch's own time goes; ledger_wait_s is how long the batch
+        # thread blocked on the concurrent ledger write. Bounded to the
+        # same replay window as PipelineMetrics, so a long-lived stream
+        # keeps O(1) trace state.
+        self.epoch_trace: deque[dict] = deque(maxlen=self.metrics._recent_max)
 
     # -- epoch processing (D13/D17/D18/D20/D24) ----------------------------
     def _epoch_dir(self, table: str, epoch_id: int) -> str:
@@ -433,7 +442,12 @@ class StreamingPipeline:
 
     # -- cross-epoch ingest dedup (config.dedup_keys) ----------------------
     _DEDUP_COL = "__dedup_digest"
+    # ledger reads are schema-pinned: inference would run a footer-read
+    # job on the driver every epoch (the r13 readback rule)
+    _LEDGER_SCHEMA = f"{_DEDUP_COL} struct<h1: bigint, h2: bigint>"
+    _ND_LEDGER_SCHEMA = "band int, sig bigint"
 
+    @cached_property
     def _digest(self) -> "F.Column":
         # 128-bit key as two seed-split xxhash64s — the repo's production
         # hash family (d03p): native, type-aware, null-safe, ~3x cheaper
@@ -441,12 +455,14 @@ class StreamingPipeline:
         # --dedup ingest bench) and the ledger stores 16 bytes of longs
         # instead of a 32-char hex string. 128 bits keeps the
         # birthday-collision expectation < 3e-18 per pair — at 10^12
-        # rows the chance of ONE wrongly-dropped row is ~3e-8.
+        # rows the chance of ONE wrongly-dropped row is ~3e-8. Built once
+        # per pipeline: each Column call is a py4j round trip, and the
+        # expression is the same every epoch.
         keys = [F.struct(*self.config.dedup_keys)]
         return F.struct(
             F.xxhash64(*keys).alias("h1"),
             F.xxhash64(F.lit(0x9E3779B9), *keys).alias("h2"),
-        )
+        ).alias(self._DEDUP_COL)
 
     def _ledger_paths(self, epoch_id: int, root: str | None = None) -> list[str]:
         """Ledger dirs for epochs STRICTLY earlier than ``epoch_id`` —
@@ -482,25 +498,26 @@ class StreamingPipeline:
         within-batch duplicates). The anti-join probes 16-byte digests,
         never payloads; the payload-side shuffle is avoided while the
         ledger stays broadcastable and Bloom-prefiltered after that."""
-        df = df.withColumn(self._DEDUP_COL, self._digest())
+        df = df.select("*", self._digest)
         df = df.dropDuplicates([self._DEDUP_COL])
         prior = self._ledger_paths(epoch_id)
         if prior:
-            hist = self.spark.read.parquet(*prior)
+            hist = self.spark.read.schema(self._LEDGER_SCHEMA).parquet(*prior)
             df = df.join(hist, self._DEDUP_COL, "left_anti")
         return df.drop(self._DEDUP_COL)
 
     def _write_ledger(self, src: DataFrame, epoch_id: int) -> None:
         """Record the digests this epoch actually inserted. Overwrite
         per-epoch dir: a replayed epoch rewrites the same state, so a
-        crash between sink write and ledger write heals on replay."""
+        crash between sink write and ledger write heals on replay.
+
+        Runs on the ledger thread (see :meth:`_start_ledgers`), so it
+        overlaps the derived sinks and the post-SQL. No ``.distinct()``:
+        ``src`` already went through ``dropDuplicates`` on this digest
+        and the anti-join, so its digests are unique — a distinct would
+        only add a shuffle and one more job per epoch."""
         path = os.path.join(self._ledger_root, f"epoch={epoch_id}")
-        (
-            src.select(self._digest().alias(self._DEDUP_COL))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+        src.select(self._digest).write.mode("overwrite").parquet(path)
         self._prune_ledger(self._ledger_root, epoch_id)
 
     def _prune_ledger(self, root: str, epoch_id: int) -> None:
@@ -587,7 +604,7 @@ class StreamingPipeline:
         prior = self._ledger_paths(epoch_id, root=self._neardup_root)
         if not prior:
             return df
-        hist = self.spark.read.parquet(*prior).distinct()
+        hist = self.spark.read.schema(self._ND_LEDGER_SCHEMA).parquet(*prior).distinct()
         # Row id is the same two-seed 128-bit family as _digest: a lone
         # 64-bit xxhash64 colliding between a flagged near-dup and an
         # unrelated row in the batch would make the left_anti drop the
@@ -623,11 +640,36 @@ class StreamingPipeline:
         (
             self._nd_band_sigs(narrow)
             .select(F.posexplode_outer("__nd_sigs").alias("band", "sig"))
-            .distinct()
+            .distinct()  # unlike row digests, band keys do repeat
             .write.mode("overwrite")
             .parquet(path)
         )
         self._prune_ledger(self._neardup_root, epoch_id)
+
+    def _start_ledgers(self, src: DataFrame, epoch_id: int) -> Future | None:
+        """Write this epoch's ledgers from ``src`` on one side thread;
+        the returned future completes (or raises) when both are written.
+        InheritableThread copies the batch thread's local properties —
+        job group and ``streaming.sql.batchId`` — so ``query.stop()``
+        still cancels the ledger jobs and the event log still attributes
+        them to their epoch."""
+        if not (self.config.dedup_keys or self.config.neardup_col):
+            return None
+        done: Future = Future()
+
+        def run() -> None:
+            try:
+                if self.config.dedup_keys:
+                    self._write_ledger(src, epoch_id)
+                if self.config.neardup_col:
+                    self._write_neardup_ledger(src, epoch_id)
+            except BaseException as e:
+                done.set_exception(e)
+            else:
+                done.set_result(None)
+
+        InheritableThread(target=run, daemon=True).start()
+        return done
 
     def _write(self, df: DataFrame, path: str, table: str) -> int:
         # Row count via Observation: piggybacks on the write job itself
@@ -739,6 +781,8 @@ class StreamingPipeline:
         if decoded_consumers > 1:
             decoded = decoded.persist()
             to_unpersist.append(decoded)
+        ledger: Future | None = None
+        _ledger_wait = 0.0
         try:
             raw_n = norm_n = custom_n = 0
             # (table, path, schema): the schema of what was written rides
@@ -764,6 +808,15 @@ class StreamingPipeline:
                 if use_readback
                 else decoded
             )
+            # The ledgers record what actually landed, so they derive
+            # from the landed raw files and run concurrently with the
+            # derived sinks and the post-SQL. In the persist fallback
+            # they start after the derived sinks: the first consumer of
+            # a persisted frame must fill the cache alone, because the
+            # consumed Observation counts only the partitions its own
+            # job's tasks compute.
+            if use_readback:
+                ledger = self._start_ledgers(derived_src, epoch_id)
 
             if self.normalizer is not None:
                 norm_table = f"{self.config.dest_table}_norm"
@@ -777,15 +830,9 @@ class StreamingPipeline:
                     p = self._epoch_dir(table, epoch_id)
                     custom_n += self._write(df, p, table)
                     written.append((table, p, df.schema))
+            if not use_readback:
+                ledger = self._start_ledgers(derived_src, epoch_id)
             _t_der = _time.monotonic()
-
-            if self.config.dedup_keys:
-                # ledger AFTER the sinks: digests of what actually landed
-                self._write_ledger(derived_src, epoch_id)
-
-            if self.config.neardup_col:
-                # band-key ledger AFTER the sinks, same landed-rows rule
-                self._write_neardup_ledger(derived_src, epoch_id)
 
             # D18: post-SQL over the *written* epoch output (the closed
             # file, not the in-flight batch) — true to DuckRunner.
@@ -793,16 +840,27 @@ class StreamingPipeline:
                 for table, path, schema in written:
                     # schema-pinned: the file was just written from a
                     # frame whose schema we hold — inference would
-                    # re-read every footer on the driver, per epoch
-                    self.spark.read.schema(schema).parquet(
-                        path
-                    ).createOrReplaceTempView(table)
+                    # re-read every footer on the driver, per epoch.
+                    # The raw table's view is the readback itself.
+                    view = (
+                        derived_src
+                        if use_readback and path == written[0][1]
+                        else self.spark.read.schema(schema).parquet(path)
+                    )
+                    view.createOrReplaceTempView(table)
                 self.runner.run(self.spark, epoch_id)
-                if self.runner.delete_on_done:
-                    import shutil
 
-                    for _, path, _schema in written:
-                        shutil.rmtree(path, ignore_errors=True)
+            # the ledgers land before any path is deleted or published
+            if ledger is not None:
+                _t_wait = _time.monotonic()
+                ledger.result()
+                _ledger_wait = _time.monotonic() - _t_wait
+
+            if self.runner is not None and self.runner.delete_on_done:
+                import shutil
+
+                for _, path, _schema in written:
+                    shutil.rmtree(path, ignore_errors=True)
 
             for table, path, _schema in written:
                 self._publish_path(path, epoch_id, table)
@@ -815,6 +873,10 @@ class StreamingPipeline:
             consumed = int(consumed_obs.get["n"]) if materialized else decoded.count()
             self.metrics.record_batch(epoch_id, consumed, raw_n, norm_n, custom_n)
         finally:
+            if ledger is not None:
+                # a failed epoch must not leave a ledger write racing
+                # its retry; the epoch's own exception wins
+                ledger.exception()
             for df in to_unpersist:
                 df.unpersist()
             _t_exit = _time.monotonic()
@@ -832,6 +894,7 @@ class StreamingPipeline:
                     "epilogue_s": round(
                         _t_exit - (_t_der or _t_raw or _t_exit), 3
                     ),
+                    "ledger_wait_s": round(_ledger_wait, 3),
                 }
             )
 

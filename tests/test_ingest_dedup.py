@@ -13,7 +13,9 @@ training-data pipeline needs.
 from __future__ import annotations
 
 import os
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 from quacfka_spark.sources.kafka import decode_json
@@ -275,3 +277,111 @@ def test_ledger_horizon_readmits_old_content(spark, tmp_path):
     pipe2.start().awaitTermination(180)
     assert pipe2.error() is None
     assert pipe2.metrics.records_inserted == 200
+
+
+def _direct_pipeline(spark, out: str) -> StreamingPipeline:
+    """A pipeline with no stream: _process_batch is driven directly, as
+    foreachBatch would call it on a retry or a replay."""
+    from quacfka_spark.plans.normalizer import NormalizerSpec
+
+    return StreamingPipeline(
+        spark,
+        None,
+        PipelineConfig(
+            output_dir=out,
+            dest_table="messages",
+            available_now=True,
+            dedup_keys=["r.user_id", "r.amount"],
+        ),
+        decode=lambda df: decode_json(df, NESTED_SCHEMA),
+        normalizer=NormalizerSpec(
+            fields=["r.user_id", "r.amount"], aliases=["user_id", "amount"]
+        ),
+    )
+
+
+def _batch(spark, lo: int, hi: int, copies: int = 1):
+    """ids lo..hi-1, each ``copies`` times (in-batch duplicates)."""
+    df = spark.range(lo, hi)
+    for _ in range(copies - 1):
+        df = df.union(spark.range(lo, hi))
+    return df.select(
+        F.encode(F.to_json(nested_payload(F.col("id"))), "utf-8").alias("value")
+    )
+
+
+def _ledger_rows(spark, out: str, epoch: int) -> tuple[int, int]:
+    """(rows, distinct digests) of one epoch's ledger."""
+    led = spark.read.parquet(os.path.join(out, "_dedup_ledger", f"epoch={epoch}"))
+    return led.count(), led.distinct().count()
+
+
+def test_failed_ledger_write_fails_epoch_and_replay_heals(spark, tmp_path):
+    """The ledger is written concurrently with the derived sinks, but a
+    failed ledger write still fails the epoch before anything is
+    published; replaying the epoch publishes each path once and leaves
+    a ledger of exactly the inserted rows."""
+    out = str(tmp_path / "out")
+    pipe = _direct_pipeline(spark, out)
+    batch = _batch(spark, 0, 100, copies=2)
+
+    def boom(src, epoch_id):
+        raise RuntimeError("ledger write failed")
+
+    pipe._write_ledger = boom
+    with pytest.raises(RuntimeError, match="ledger write failed"):
+        pipe._process_batch(batch, 0)
+    assert pipe.completed_paths == []
+    assert not os.path.exists(pipe._paths_log)
+    assert pipe.metrics.report()["batches"] == 0
+
+    del pipe._write_ledger  # the retry finds the real ledger writer
+    pipe._process_batch(batch, 0)
+    pipe._process_batch(batch, 0)  # and a replay of the committed epoch
+    assert len(pipe.completed_paths) == len(set(pipe.completed_paths)) == 2
+    assert sum(1 for _ in open(pipe._paths_log)) == 2
+    assert pipe.metrics.records_inserted == 100
+    assert _ledger_rows(spark, out, 0) == (100, 100)
+
+
+def test_ledger_thread_inherits_local_properties(spark, tmp_path):
+    """The ledger runs on its own thread, which carries the calling
+    thread's local properties (job group, streaming batch id), so
+    query.stop() cancels its jobs and the event log attributes them to
+    their epoch."""
+    out = str(tmp_path / "out")
+    pipe = _direct_pipeline(spark, out)
+    seen = {}
+    write_ledger = pipe._write_ledger
+
+    def spy(src, epoch_id):
+        seen["prop"] = spark.sparkContext.getLocalProperty("quacfka.test.epoch")
+        seen["thread"] = threading.get_ident()
+        write_ledger(src, epoch_id)
+
+    pipe._write_ledger = spy
+    spark.sparkContext.setLocalProperty("quacfka.test.epoch", "epoch-3")
+    try:
+        pipe._process_batch(_batch(spark, 0, 50), 3)
+    finally:
+        spark.sparkContext.setLocalProperty("quacfka.test.epoch", None)
+    assert seen["prop"] == "epoch-3"
+    assert seen["thread"] != threading.get_ident()
+    assert _ledger_rows(spark, out, 3) == (50, 50)
+    assert pipe.epoch_trace[-1]["ledger_wait_s"] >= 0
+
+
+def test_ledger_rows_equal_inserted_rows_under_in_batch_duplicates(spark, tmp_path):
+    """Each epoch's ledger has one row per distinct digest, and that is
+    the epoch's inserted count: the rows it hashes were already deduped
+    in-batch and against history, so the ledger needs no distinct."""
+    out = str(tmp_path / "out")
+    pipe = _direct_pipeline(spark, out)
+    # epoch 0: ids 0-99 three times; epoch 1: ids 50-149 twice
+    pipe._process_batch(_batch(spark, 0, 100, copies=3), 0)
+    pipe._process_batch(_batch(spark, 50, 150, copies=2), 1)
+    inserted = {e: raw for e, (_, raw, _, _) in pipe.metrics.epoch_rows().items()}
+    assert inserted == {0: 100, 1: 50}
+    for epoch, n in inserted.items():
+        assert _ledger_rows(spark, out, epoch) == (n, n)
+    assert pipe.metrics.records_consumed == 500

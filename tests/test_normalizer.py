@@ -89,3 +89,38 @@ def test_transform_registry(nested_df):
     outs = reg.apply_all(nested_df)
     assert set(outs) == {"site_counts"}
     assert outs["site_counts"].count() == 3
+
+
+def test_compiled_spec_reused_for_same_schema_and_recompiled_on_drift(spark, nested_df):
+    """A spec keeps the columns it compiled for the last input schema (a
+    streaming epoch applies it to the same schema every time); another
+    frame of that schema gets the same rows as a fresh spec, and a
+    drifted schema recompiles instead of reusing stale columns."""
+    from pyspark.sql import functions as F
+
+    fields = ["site.id", "n", "deals.id"]
+    aliases = ["site", "n", "deal_id"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    spec = NormalizerSpec(fields=fields, aliases=aliases)
+    first = rows(spec.apply(nested_df))
+    compiled = spec._compiled
+    other = spark.createDataFrame(
+        [Row(site=Row(id=4, name="d"), deals=[Row(id=40, kind="w")], n=1)],
+        schema=nested_df.schema,
+    )
+    assert rows(spec.apply(other)) == rows(
+        NormalizerSpec(fields=fields, aliases=aliases).apply(other)
+    ) == [(4, 1, 40)]
+    assert spec._compiled is compiled  # same schema: nothing recompiled
+    assert first == [(1, 5, 10), (1, 5, 11), (2, 7, None), (3, 9, 30)]
+
+    # drift: the repeated field becomes a single struct, so the compiled
+    # explode no longer applies — one row per input, no NULL row
+    drifted = nested_df.withColumn("deals", F.try_element_at("deals", F.lit(1)))
+    assert rows(spec.apply(drifted)) == [(1, 5, 10), (2, 7, None), (3, 9, 30)]
+    assert spec._compiled[0] == drifted.schema
+    # and back: the original schema recompiles to the exploding form
+    assert rows(spec.apply(nested_df)) == first

@@ -22,6 +22,7 @@ Usage:
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import statistics
@@ -29,20 +30,43 @@ import sys
 import time
 
 
-def load_registry(root: str):
-    """Import the quacfka_spark registry from ``root``, isolated from any
-    previously loaded universe (function objects keep references to their
-    own modules, so two universes coexist)."""
-    for k in list(sys.modules):
-        if k == "quacfka_spark" or k.startswith("quacfka_spark."):
-            del sys.modules[k]
+def _ours(name: str) -> bool:
+    return name == "quacfka_spark" or name.startswith("quacfka_spark.")
+
+
+@contextlib.contextmanager
+def universe(root: str, modules: dict):
+    """Resolve ``quacfka_spark`` imports to ``root`` inside the block.
+
+    Operators import helpers inside function bodies (e.g. similarity.py's
+    ``with_l2_normalized``), so those imports resolve at CALL time; a
+    variant must run with its own modules in ``sys.modules`` and its own
+    root first on ``sys.path``, or it silently runs the other root's
+    helpers. ``modules`` is the variant's module universe: it is installed
+    on entry and collects whatever the block imported on exit. Both
+    ``sys.modules`` and ``sys.path`` are restored afterwards."""
+    saved = {k: sys.modules.pop(k) for k in list(sys.modules) if _ours(k)}
+    sys.modules.update(modules)
     sys.path.insert(0, root)
     try:
-        from quacfka_spark.registry import get_queries
-
-        return dict(get_queries())
+        yield
     finally:
         sys.path.remove(root)
+        for k in [k for k in sys.modules if _ours(k)]:
+            modules[k] = sys.modules.pop(k)
+        sys.modules.update(saved)
+
+
+def load_registry(root: str):
+    """Import the quacfka_spark registry from ``root`` into a fresh module
+    universe (function objects keep references to their own modules, so
+    two universes coexist); returns the queries and that universe."""
+    modules: dict = {}
+    with universe(root, modules):
+        from quacfka_spark.registry import get_queries
+
+        queries = dict(get_queries())
+    return queries, modules
 
 
 def main() -> None:
@@ -58,38 +82,39 @@ def main() -> None:
     ap.add_argument("--out", default="/tmp/ab_interleave.json")
     args = ap.parse_args()
 
-    qa = load_registry(os.path.abspath(args.a))
-    qb = load_registry(os.path.abspath(args.b))
+    roots = {"A": os.path.abspath(args.a), "B": os.path.abspath(args.b)}
+    loaded = {key: load_registry(root) for key, root in roots.items()}
 
     # one session for both universes (same confs: session.py is identical
     # unless the round changed it — then pass the ROOT whose conf is the
     # candidate's as --b and note it in the writeup)
-    sys.path.insert(0, os.path.abspath(args.b))
-    from quacfka_spark.session import get_spark
+    with universe(roots["B"], loaded["B"][1]):
+        from quacfka_spark.session import get_spark
 
-    spark = get_spark("ab-interleave")
+        spark = get_spark("ab-interleave")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(fn, label):
-        spark.sparkContext.setJobDescription(label)
-        t0 = time.perf_counter()
-        df = fn(spark, args.sf_dir)
-        t1 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        spark.sparkContext.setJobDescription(None)
+    def run(name, key, label):
+        queries, modules = loaded[key]
+        with universe(roots[key], modules):
+            spark.sparkContext.setJobDescription(label)
+            t0 = time.perf_counter()
+            df = queries[name](spark, args.sf_dir)
+            t1 = time.perf_counter()
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            spark.sparkContext.setJobDescription(None)
         return t1 - t0, t2 - t1
 
     results = {}
     for name in args.query:
-        fa, fb = qa[name], qb[name]
         # warmup once per variant (JVM/codegen/scan caches) — unreported
-        run(fa, f"{name} A warmup")
-        run(fb, f"{name} B warmup")
+        run(name, "A", f"{name} A warmup")
+        run(name, "B", f"{name} B warmup")
         recs = {"A": [], "B": []}
         for rep in range(args.reps):
-            for key, fn in (("A", fa), ("B", fb)):
-                b, e = run(fn, f"{name} {key} rep{rep}")
+            for key in ("A", "B"):
+                b, e = run(name, key, f"{name} {key} rep{rep}")
                 recs[key].append((round(b, 3), round(e, 3)))
         summ = {}
         for key in ("A", "B"):
