@@ -1146,6 +1146,50 @@ def d07qx_int8_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _d07_pairs_block(tbl, band, x, y, self_pairs: bool):
+    """d07's per-bucket verify (the block lsh_tuning._bucket_kernel
+    calls): cosine threshold of x rows against y, chunked (_D07_CHUNK
+    rows of the cosine matrix at a time, so task memory stays
+    O(bucket x chunk)), then min-band dedup — a pair is kept only by
+    the FIRST band on which its full signature arrays agree, so pairs
+    colliding in several buckets need no DISTINCT and no second
+    shuffle. Self mode masks ids_x < ids_y; cross mode (two disjoint
+    salt groups) orients each pair as (min, max)."""
+    import numpy as np
+
+    from quacfka_spark.operators.arrowkit import cosine_block, str_matrix
+
+    ids_x, mx, nx, rows_x = x
+    ids_y, my, ny, rows_y = y
+    # m x BANDS of '0101' strings; band-0 buckets never consult it
+    # (every band-0 collision is by definition the first), so skip
+    # the bucket-sized string conversion there
+    if band > 0:
+        sigm = str_matrix(tbl, "sigs")
+        sgx, sgy = sigm[rows_x], sigm[rows_y]
+    oi, oj, oc = [], [], []
+    for lo in range(0, len(ids_x), _D07_CHUNK):
+        hi = min(lo + _D07_CHUNK, len(ids_x))
+        with np.errstate(invalid="ignore"):
+            cos = cosine_block(mx, nx, my, ny, lo, hi)
+            keep = cos >= _D05_THRESHOLD  # NaN (zero-norm) -> False
+        if self_pairs:
+            keep &= ids_x[lo:hi, None] < ids_y[None, :]
+        ii, jj = np.nonzero(keep)
+        if band > 0 and len(ii):
+            # argmax finds the first agreeing band (equality at `band`
+            # holds by bucket construction); n_pairs x BANDS, never
+            # the chunk x m x BANDS tensor
+            first = (sgx[lo + ii] == sgy[jj]).argmax(axis=1) == band
+            ii, jj = ii[first], jj[first]
+        if len(ii):
+            u, v = ids_x[lo + ii], ids_y[jj]
+            oi.append(np.minimum(u, v))
+            oj.append(np.maximum(u, v))
+            oc.append(cos[ii, jj])
+    return oi, oj, oc
+
+
 def _cosine_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -1161,137 +1205,44 @@ def _cosine_lsh_pairs(
     """Unordered verified near-dup pairs (i, j, cos) — shared by d07
     (reported pairs) and d08 (keep-list clustering).
 
-    Bucket-local verify: vectors ride the band shuffle (each vector is
-    exchanged exactly BANDS times), then every (band, sig) bucket
-    verifies its own pairs with one vectorized numpy matmul inside
-    applyInArrow. This replaces the earlier narrow-row design (band
-    self-join -> DISTINCT -> two vector join-backs -> Arrow cosine UDF)
-    after profiling at sf0.1 showed candidate precision of ~0.4% at the
-    0.35 threshold: the join materialized ~500k candidate pair rows, a
-    455k-row DISTINCT hash-agg, and a ~0.5 GB Arrow transfer to verify
-    down to ~2k surviving pairs. Here shuffle volume is N x BANDS rows
-    (vector payload included) REGARDLESS of candidate count — the
-    quadratic term never leaves the bucket's numpy matrices, and it is
-    chunked (_D07_CHUNK rows of the cosine matrix at a time) so task
-    memory stays O(bucket x chunk), not O(bucket^2).
+    Runs the banded sign-LSH exchange of operators/lsh_tuning.py
+    (``_bucket_exchange`` states the salting, salt-first width and
+    int8-payload mechanism shared with sim10); what is d07's own:
 
-    Pairs colliding in several buckets are deduplicated with the
-    min-band trick instead of a DISTINCT: the full signature array rides
-    along, and a pair is emitted only by the FIRST band on which its
-    signatures agree — no second shuffle anywhere.
-
-    Degenerate buckets (a signature shared by a large fraction of the
-    corpus) are the classic LSH skew risk and the single-task ceiling:
-    a bucket holding p·N vectors does (p·N)^2 cosine work in ONE task
-    while every other task idles. ``salt_buckets=S`` is the production
-    mitigation: each vector draws a deterministic salt (xxhash64 of its
-    id mod S) and replicates to the S salt-PAIR sub-buckets it
-    participates in — the d05 triangle decomposition applied inside a
-    bucket. Every unordered pair lives in exactly ONE (band, sig,
-    pa<=pb) sub-bucket (its two salts are fixed), so the pair set and
-    the min-band dedup are IDENTICAL to the unsalted plan (engine test
-    asserts set equality) while the per-task cosine work drops to
-    ~(bucket/S)^2 and the S(S+1)/2 sub-tasks spread across the
-    cluster. Cost: each banded row is exchanged S times instead of
-    once — pay it when a corpus is known to produce dominant
-    signatures (the scale probe's clustered generator is exactly such
-    a corpus), keep S=1 otherwise.
-
-    ``auto=True`` replaces the manual pick with the occupancy-driven
-    chooser (operators/lsh_tuning.py): one cheap (band, sig) count agg
-    sets S = ceil(max_occupancy / 17100). The target is the MEASURED
-    optimum, reflecting that d07's total verify work is
-    salt-invariant, so the smallest adequately-spread S wins: probes
-    show S=2 tying the manual salt-4 at 250k vectors (23.4 s vs
-    23.5 s) and S=4 measured-best at 1M (339.7 s, where a tighter
-    target's S=14 paid 410.7 s in 14x band replication) — identical
-    pair sets throughout. Hot corpora salt themselves; benign corpora
-    stay on the replication-free S=1 plan. Output is identical either
-    way (the engine-tested salting invariant); auto only picks WHICH
-    identical-output plan runs.
-
-    ``bits``/``bands`` parameterize the band family's width and count
-    (default: the registered 4x4). Width is the occupancy knob that
-    salting is NOT: with B sign bits per band even a benign corpus
-    packs ~N/2^B vectors into its hottest bucket, so fixed B=4 +
-    MAX_SALT=16 turns quadratic past ~4-8M vectors (round-8 verdict
-    #1). ``auto_bits=True`` engages the occupancy-adaptive chooser
-    (lsh_tuning.choose_band_bits_measured), SALT-FIRST: width widens
-    only when the hottest bucket exceeds target * MAX_SALT — i.e.
-    where salting (which is recall-free) saturates, ~4.4M benign
-    vectors at the 4-bit floor — via an analytic first guess from
-    the corpus count, then measured escalation only while a
-    (band, sig) agg shows the hottest bucket actually splitting;
-    residual hot mass is near-identical vectors (sign bits can't
-    split them) and falls to the salt knob, whose measured occupancy
-    is reused without a second agg. UNLIKE salt, width changes the
-    CANDIDATE SET (a stricter collision filter -> recall trade,
-    measured in SCALE_PROBE_BITS_*.json); every emitted pair is
-    still exact-verified, so precision stays 1.0 at any width and
-    the width-parameterized oracle (_d07_oracle(bits, bands)) checks
-    exact parity at non-default widths (the d07w registered key).
-    ``auto_bands=True`` (only meaningful with auto_bits) recovers the
-    candidate recall a forced widening costs: when the chooser widens
-    past the configured floor, the band count is raised to the
-    analytic bands_for_recall match (1-(1-p^B)^L held at the floor
-    family's level, p taken at the verify threshold — the
-    conservative Charikar sign-LSH model), paying linear shuffle
-    replication instead of quadratic verify; capped at dim // bits.
-
-    Measured AT the engagement point (r10): at the true 4.5M notch,
-    occupancy 288,414 > the 273,600 salt budget, measured chooser
-    escalation to 5 bits, and a 1-in-32-stratum recall certification
-    at the chosen width (SCALE_PROBE_D07_AUTO_5M.json: baseline
-    0.4879 / unrecovered 0.3314 / 5x7-recovered 0.5072 — ABOVE the
-    baseline); full three-row wall comparison at a disk-feasible
-    scaled notch (SCALE_PROBE_D07_AUTO_SCALED.json: salt-capped fixed
-    width 645.8 s vs auto_bits 160.4 s vs auto_bits+auto_bands
-    365.3 s with MORE verified pairs than the fixed plan, 703.2M vs
-    675.6M; emitted-pair ratios reproduce the stratum recall ratios
-    to 3 decimals). The same artifacts record why the true-notch
-    salted full row could not run on one VM with the float payload:
-    the S=16 band exchange carries the embedding on every replica
-    (~115 GB of shuffle scratch at 4.5M) — a per-executor disk
-    provision at cluster scale, not a memory bound.
-
-    ``verify_payload="int8"`` is the footprint answer (r10 verdict
-    #2): the band exchange ships an int8 quantization of the
-    NORMALIZED vector (q = round(127 * x / ||v||), array<tinyint> —
-    4x fewer payload bytes per banded replica) while the band
-    signatures stay sign-of-float32, so the CANDIDATE SET is
-    identical to the float plan; only the verify cosine moves, by
-    O(1/127) per component at the threshold boundary. The verify
-    itself gets FASTER, not approximate-er, in-kernel: int8 dots are
-    integers < 2^24, exact in float32 SGEMM whatever the summation
-    order (arrowkit.cosine_prep), and the normalize-after matches
-    DuckDB's list_cosine_similarity op for op — so the quantized key
-    (d07q) hash-matches an exact DuckDB oracle replicating the same
-    quantization, and d07qx gates its pair-set agreement against the
-    float family. Keep float32 (default) when the 4dp cosine values
-    must match d05/d07's; ship int8 when the salted exchange is the
-    binding constraint. MEASURED at the true notch (r11,
-    SCALE_PROBE_D07_INT8_5M.json): the 4.5M S=16 salt-capped row that
-    died on float completes with int8 — 8361 s wall, 10.63B verified
-    pairs, band-exchange shuffle write 20.3 GB (REST-API-measured; a
-    5x+ reduction vs the >100 GB float death) — i.e. the production-
-    constant engagement mechanism now has full-kernel walls at its
-    own scale, not only at the T-scaled replica. The full three-row
-    family completed there: auto_bits 5362 s / 7.22B pairs (the
-    emitted-pair ratio 0.679 reproduces the stratum-recall
-    certification to 3 decimals) and auto_bits+auto_bands 4876 s /
-    11.05B pairs = 1.039x the salt-capped count (1.041 predicted —
-    recall recovered ABOVE the 4-bit baseline). The recovery wall
-    undercutting autobits despite 1.53x the pairs is attributed to
-    host-window contention across the multi-hour runs (the artifact's
-    wall_inversion note); the cross-row recall ratios are the
-    window-independent statistic.
+    - **Threshold verify with min-band dedup** (``_d07_pairs_block``):
+      every (band, sig) bucket keeps its pairs at cosine >= 0.35 and
+      emits each only from its first agreeing band. This replaced a
+      narrow-row design (band self-join -> DISTINCT -> vector join-
+      backs) whose candidate precision was ~0.4% at sf0.1: ~500k
+      candidate rows and a 455k-row DISTINCT to verify ~2k pairs.
+      Shuffle volume is now N x BANDS rows regardless of candidates.
+    - **Occupancy salt rule** (``auto=True``): d07's total verify work
+      is salt-invariant, so the smallest adequately-spread salt wins —
+      S = ceil(max_occupancy / 17100) (lsh_tuning.salt_for_occupancy,
+      reusing the width chooser's measurement when auto_bits ran).
+      Measured: S=2 ties the manual salt-4 at 250k vectors (23.4 vs
+      23.5 s); S=4 is best at 1M (339.7 s, where a tighter target's
+      S=14 paid 410.7 s), identical pair sets throughout.
+    - **auto_bands** (only with auto_bits): when the width chooser
+      widens past the configured floor, the band count rises to the
+      analytic bands_for_recall match (1-(1-p^B)^L held at the floor
+      family's level, p at the verify threshold), capped at
+      dim // bits — linear shuffle replication instead of lost recall.
+      Measured at the true 4.5M notch (SCALE_PROBE_D07_AUTO_5M.json):
+      occupancy 288,414 > the 273,600 salt budget escalates to 5 bits;
+      stratum recall baseline 0.4879 / unrecovered 0.3314 / 5x7-
+      recovered 0.5072. At the scaled notch
+      (SCALE_PROBE_D07_AUTO_SCALED.json): salt-capped fixed width
+      645.8 s vs auto_bits 160.4 s vs auto_bits+auto_bands 365.3 s with
+      more verified pairs than the fixed plan (703.2M vs 675.6M). With
+      the int8 payload at the true notch (SCALE_PROBE_D07_INT8_5M.json):
+      salt-capped 8361 s / 10.63B pairs, auto_bits 5362 s / 7.22B
+      (pair ratio 0.679 reproduces the stratum recall to 3 decimals),
+      auto_bits+auto_bands 4876 s / 11.05B = 1.039x the salt-capped
+      count (1.041 predicted); the recovery row undercutting auto_bits
+      is attributed to host contention across multi-hour runs.
     """
-    from quacfka_spark.operators.lsh_tuning import (
-        D07_TARGET_ROWS,
-        MAX_SALT,
-        salt_for_occupancy,
-        sign_band_cols,
-    )
+    from quacfka_spark.operators import lsh_tuning as lt
 
     t = load_views(spark, sf_dir)
     # NULL embeddings can never verify (oracle: list_cosine_similarity
@@ -1302,277 +1253,36 @@ def _cosine_lsh_pairs(
     # the bytes); the kernel widens AFTER the shuffle — bit-exact.
     e = t["embeddings"].filter(F.col("embedding").isNotNull())
 
-    def _banded_from(frame, ship, b_: int) -> DataFrame:
-        # sigs come from the ORIGINAL float32 vector (identical
-        # candidate set at any payload); the shipped column keeps the
-        # name "embedding" so both verify kernels and the salted
-        # replication below are payload-agnostic
-        return frame.select(
-            "vec_id",
-            ship.alias("__emb"),
-            F.array(*sign_band_cols(b_, bands)).alias("sigs"),
-        ).withColumnRenamed("__emb", "embedding").select(
-            "vec_id", "embedding", "sigs",
-            F.posexplode_outer(F.col("sigs")).alias("band", "sig"),
-        )
-
-    def _banded(b_: int) -> DataFrame:
-        # CHOOSER face: always the float payload. mapInArrow is a
-        # column-pruning barrier, so banding a quantized frame here
-        # would make every narrow chooser agg (occupancy counts, the
-        # n/dim agg) pay a full quantization pass it doesn't need
-        # (r12 advisor); the quantizer applies only to the final
-        # banded frame below. Chooser results are payload-invariant
-        # by construction — occupancy depends only on the sigs, which
-        # hash the float column under either payload.
-        return _banded_from(e, F.col("embedding"), b_)
-
     occ = None
     if auto_bits:
-        from quacfka_spark.operators.lsh_tuning import (
-            bands_for_recall,
-            choose_band_bits_measured,
+        base_bits, base_bands = bits, bands
+        bits, occ, dim = lt._measured_width(
+            e, bits, bands, lt.D07_TARGET_ROWS, auto=auto, salt=salt_buckets
         )
-
-        # one narrow agg: corpus count + embedding dim (the width cap)
-        n_vecs, dim = e.agg(
-            F.count(F.lit(1)), F.min(F.size("embedding"))
-        ).first()
-        if n_vecs and dim:
-            base_bits, base_bands = bits, bands
-            # min_bits=bits: a caller-configured width is the FLOOR —
-            # the chooser may widen past it but never narrows below
-            # the occupancy bound the caller asked for.
-            # max_salt mirrors the salt plan that ACTUALLY runs
-            # (advisor r9): with auto salting the full MAX_SALT
-            # spreading budget is real, but a manual/disabled salt
-            # (auto=False) leaves hot buckets unsalted at whatever S
-            # the caller fixed — the width budget must reflect that,
-            # or buckets inside the phantom salt budget stay unsplit
-            # AND unsalted (single-task occ^2 verify work).
-            bits, occ = choose_band_bits_measured(
-                _banded,
-                int(n_vecs),
-                dim=int(dim),
-                bands=bands,
-                target_rows=D07_TARGET_ROWS,
-                min_bits=bits,
-                max_salt=MAX_SALT if auto else max(1, int(salt_buckets)),
+        if auto_bands and bits > base_bits:
+            bands = lt.bands_for_recall(
+                bits,
+                dim=dim,
+                threshold=_D05_THRESHOLD,
+                base_bits=base_bits,
+                base_bands=base_bands,
             )
-            if auto_bands and bits > base_bits:
-                # width engaged -> recover candidate recall with more
-                # bands (linear shuffle cost instead of quadratic
-                # verify; lsh_tuning.bands_for_recall)
-                bands = bands_for_recall(
-                    bits,
-                    dim=int(dim),
-                    threshold=_D05_THRESHOLD,
-                    base_bits=base_bits,
-                    base_bands=base_bands,
-                )
-                if bands != base_bands:
-                    # the added bands hash DIFFERENT dims, so the hot
-                    # bucket of the widened family can exceed what was
-                    # measured over the base bands (a sign-skewed tail
-                    # dim packs a near-constant band) — drop the stale
-                    # measurement and let the salt chooser re-measure
-                    # the family that actually runs
-                    occ = None
-
-    if verify_payload == "int8":
-        # one vectorized Arrow pass appends q8 = round(127*x/||v||)
-        # tinyints BEFORE banding (functions/vector.with_int8_embedding
-        # — the pure-Catalyst transform re-evaluated the norm fold per
-        # element and per banded replica, ~10-40x this wall; values
-        # bit-identical, r12). Applied ONLY to the final banded frame,
-        # after the width chooser and invisible to the salt chooser
-        # below (r12 advisor: keep the choosers' cheap-narrow-agg
-        # contract — occupancy is payload-invariant since sigs hash
-        # the float column either way). Zero-norm vectors quantize to
-        # zeros and can never verify, exactly like their float
-        # NaN-cosine behavior.
-        from quacfka_spark.functions.vector import with_int8_embedding
-
-        banded = _banded_from(with_int8_embedding(e), F.col("q8"), bits)
-    else:
-        banded = _banded(bits)
-
-    def bucket_verify(key, tbl):
-        import numpy as np
-
-        from quacfka_spark.operators.arrowkit import (
-            cosine_block, cosine_prep, list_matrix, np_col, pairs_table,
-            str_matrix,
-        )
-
-        band = key[0].as_py()  # applyInArrow keys are pyarrow scalars
-        m = len(tbl)
-        if m < 2:
-            return pairs_table()
-        ids = np_col(tbl, "vec_id")
-        # dtype=None keeps the stored payload (float32 default, int8
-        # quantized); cosine_prep normalizes floats up front / keeps
-        # int8 for the exact-SGEMM path — see arrowkit
-        mat, nrms = cosine_prep(list_matrix(tbl, "embedding", dtype=None))
-        # m x BANDS of '0101' strings; band-0 buckets never consult it
-        # (every band-0 collision is by definition the first), so skip
-        # the bucket-sized string conversion there
-        sigm = str_matrix(tbl, "sigs") if band > 0 else None
-        oi, oj, oc = [], [], []
-        for lo in range(0, m, _D07_CHUNK):
-            hi = min(lo + _D07_CHUNK, m)
-            with np.errstate(invalid="ignore"):
-                cos = cosine_block(mat, nrms, mat, nrms, lo, hi)
-                keep = cos >= _D05_THRESHOLD  # NaN (zero-norm) -> False
-            keep &= ids[lo:hi, None] < ids[None, :]
-            ii, jj = np.nonzero(keep)
-            if not len(ii):
-                continue
-            # min-band dedup: emit only if no EARLIER band already
-            # collided for this pair (argmax finds the first agreeing
-            # band; equality at `band` holds by bucket construction).
-            # Computed on the threshold survivors only — n_pairs x BANDS,
-            # never the chunk x m x BANDS tensor.
-            if band > 0:
-                eq = sigm[lo + ii, :] == sigm[jj, :]
-                first = eq.argmax(axis=1) == band
-                ii, jj = ii[first], jj[first]
-                if not len(ii):
-                    continue
-            oi.append(ids[lo + ii])
-            oj.append(ids[jj])
-            oc.append(cos[ii, jj])
-        if not oi:
-            return pairs_table()
-        return pairs_table(
-            np.concatenate(oi), np.concatenate(oj), np.concatenate(oc)
-        )
-
+            if bands != base_bands:
+                # the added bands hash DIFFERENT dims, so the widened
+                # family's hot bucket can exceed what was measured over
+                # the base bands — let the salt chooser re-measure
+                occ = None
     if auto:
-        if occ is not None:
-            # auto_bits already measured occupancy at the chosen width
-            salt_buckets = salt_for_occupancy(occ, D07_TARGET_ROWS)
-        else:
-            from quacfka_spark.operators.lsh_tuning import choose_salt
-
-            # float banded face, not the (possibly quantized) final
-            # frame — the chooser's count agg must stay narrow (r12
-            # advisor); occupancy is identical under either payload
-            salt_buckets = choose_salt(_banded(bits), D07_TARGET_ROWS)
-
-    if salt_buckets <= 1:
-        return (
-            banded.groupBy("band", "sig")
-            .applyInArrow(bucket_verify, schema="i bigint, j bigint, cos double")
-            .select("i", "j", F.round("cos", 4).alias("cos"))
-        )
-
-    # Salted plan: triangle decomposition inside each (band, sig) bucket
-    # (see docstring). Deterministic salt -> every unordered pair lands
-    # in exactly one (pa <= pb) sub-bucket; no cross-sub-bucket dedup
-    # pass is ever needed.
-    S = int(salt_buckets)
-    pair_structs = [
-        F.struct(
-            F.least(F.col("slt"), F.lit(y)).alias("pa"),
-            F.greatest(F.col("slt"), F.lit(y)).alias("pb"),
-        )
-        for y in range(S)
-    ]
-    rep = (
-        banded.withColumn("slt", F.pmod(F.xxhash64("vec_id"), F.lit(S)))
-        .select(
-            "vec_id", "embedding", "sigs", "band", "sig", "slt",
-            F.explode(F.array(*pair_structs)).alias("p"),
-        )
-        .select(
-            "vec_id", "embedding", "sigs", "band", "sig", "slt",
-            F.col("p.pa"), F.col("p.pb"),
-        )
-    )
-
-    def bucket_verify_salted(key, tbl):
-        import numpy as np
-
-        from quacfka_spark.operators.arrowkit import (
-            cosine_block, cosine_prep, list_matrix, np_col, pairs_table,
-            str_matrix,
-        )
-
-        # applyInArrow keys are pyarrow scalars -> unwrap to Python
-        band, _sig, sa, sb = (x.as_py() for x in key)
-
-        ids_all = np_col(tbl, "vec_id")
-        mat_all, nrm_all = cosine_prep(
-            list_matrix(tbl, "embedding", dtype=None)
-        )
-        sigm_all = str_matrix(tbl, "sigs") if band > 0 else None
-
-        def sel(mask):
-            return (
-                ids_all[mask],
-                mat_all[mask],
-                nrm_all[mask] if nrm_all is not None else None,
-                sigm_all[mask] if band > 0 else None,
+        salt_buckets = (
+            lt.salt_for_occupancy(occ, lt.D07_TARGET_ROWS)
+            if occ is not None
+            else lt.choose_salt(
+                lt._banded(e, "float32", bits, bands), lt.D07_TARGET_ROWS
             )
-
-        oi, oj, oc = [], [], []
-        if sa == sb:
-            # diagonal sub-bucket: the unsalted self-verify over the
-            # sa-salt members (they carry exactly one (sa, sa) struct)
-            if len(tbl) < 2:
-                return pairs_table()
-            ids, mat, nrm, sigm = ids_all, mat_all, nrm_all, sigm_all
-            for lo in range(0, len(ids), _D07_CHUNK):
-                hi = min(lo + _D07_CHUNK, len(ids))
-                with np.errstate(invalid="ignore"):
-                    cos = cosine_block(mat, nrm, mat, nrm, lo, hi)
-                    keep = cos >= _D05_THRESHOLD
-                keep &= ids[lo:hi, None] < ids[None, :]
-                ii, jj = np.nonzero(keep)
-                if band > 0 and len(ii):
-                    eq = sigm[lo + ii, :] == sigm[jj, :]
-                    first = eq.argmax(axis=1) == band
-                    ii, jj = ii[first], jj[first]
-                if len(ii):
-                    oi.append(ids[lo + ii])
-                    oj.append(ids[jj])
-                    oc.append(cos[ii, jj])
-        else:
-            # off-diagonal: cross pairs between the two salt groups
-            # (disjoint by construction, so no i<j mask — orient by id)
-            slt = np_col(tbl, "slt")
-            ids_x, mx, nx, sgx = sel(slt == sa)
-            ids_y, my, ny, sgy = sel(slt == sb)
-            if len(ids_x) == 0 or len(ids_y) == 0:
-                return pairs_table()
-            for lo in range(0, len(ids_x), _D07_CHUNK):
-                hi = min(lo + _D07_CHUNK, len(ids_x))
-                with np.errstate(invalid="ignore"):
-                    cos = cosine_block(mx, nx, my, ny, lo, hi)
-                    keep = cos >= _D05_THRESHOLD
-                ii, jj = np.nonzero(keep)
-                if band > 0 and len(ii):
-                    eq = sgx[lo + ii, :] == sgy[jj, :]
-                    first = eq.argmax(axis=1) == band
-                    ii, jj = ii[first], jj[first]
-                if len(ii):
-                    u, v = ids_x[lo + ii], ids_y[jj]
-                    oi.append(np.minimum(u, v))
-                    oj.append(np.maximum(u, v))
-                    oc.append(cos[ii, jj])
-        if not oi:
-            return pairs_table()
-        return pairs_table(
-            np.concatenate(oi), np.concatenate(oj), np.concatenate(oc)
         )
-
-    return (
-        rep.groupBy("band", "sig", "pa", "pb")
-        .applyInArrow(
-            bucket_verify_salted, schema="i bigint, j bigint, cos double"
-        )
-        .select("i", "j", F.round("cos", 4).alias("cos"))
+    banded = lt._banded(e, verify_payload, bits, bands)
+    return lt._bucket_exchange(banded, salt_buckets, _d07_pairs_block).select(
+        "i", "j", F.round("cos", 4).alias("cos")
     )
 
 
@@ -1984,7 +1694,7 @@ def d10_semdedup(
         ids = np_col(tbl, "vec_id")
         m = list_matrix(tbl, "embedding")
         # zero-norm rows -> NaN cosine -> below-threshold (they can
-        # never verify; same rule as d07's bucket_verify). Out-of-place:
+        # never verify; same rule as _d07_pairs_block). Out-of-place:
         # the zero-copy matrix is read-only when parquet is float64.
         with np.errstate(divide="ignore", invalid="ignore"):
             m = m / np.linalg.norm(m, axis=1, keepdims=True)

@@ -397,6 +397,18 @@ _M06_BANDS = 4          # 4 bands x 8 bits
 _M06_MAX_HAMMING = 4
 
 
+def _bucket_bounds(k: int) -> tuple[str, str]:
+    """SQL for the 0-based bounds of bucket ``b`` of ``k`` over an
+    ``n``-element array: lo(b) = ceil(b*n/k), hi(b) = ceil((b+1)*n/k),
+    i.e. exactly the (pos*k) DIV n == b set the oracles bucket by. The
+    product runs in BIGINT — b * n in INT overflows under ANSI past
+    ~2^31/k elements (~67M chars at k = 32); each quotient is <= n, so
+    it narrows back to INT losslessly."""
+    lo = f"CAST((b * CAST(n AS BIGINT) + {k - 1}) DIV {k} AS INT)"
+    hi = f"CAST(((b + 1) * CAST(n AS BIGINT) + {k - 1}) DIV {k} AS INT)"
+    return lo, hi
+
+
 @query(
     "m06_ahash_neardup",
     oracle=f"""
@@ -482,12 +494,9 @@ def m06_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("p").alias("n"),
         F.expr("aggregate(p, 0L, (a, x) -> a + x)").alias("tot"),
     )
-    # 0-based bucket bounds: lo(b) = ceil(b*n/B), hi(b) = ceil((b+1)*n/B);
-    # slice() is 1-based, so start = lo(b)+1. Integer arithmetic matches
-    # the oracle's (pos*B)//n bucketing exactly; n >= B makes every
+    # slice() is 1-based, so start = lo(b)+1; n >= B makes every
     # bucket non-empty.
-    lo = f"(b * n + {B - 1}) DIV {B}"
-    hi = f"((b + 1) * n + {B - 1}) DIV {B}"
+    lo, hi = _bucket_bounds(B)
     bsf = h.select(
         "doc_id",
         "n",
@@ -613,8 +622,7 @@ def m07_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the collect_list sort of the old shape disappear; the cell
     # array is ordered by construction (no array_sort needed). n >= C
     # guarantees every cell non-empty (ANSI-safe element_at below).
-    lo = f"(b * n + {C - 1}) DIV {C}"
-    hi = f"((b + 1) * n + {C - 1}) DIV {C}"
+    lo, hi = _bucket_bounds(C)
     arr = px.select(
         "doc_id", "p", F.size("p").alias("n")
     ).select(

@@ -1268,88 +1268,89 @@ def sim10wx_wideband_agreement(
     )
 
 
-def _sim10_topk_block(ids_x, mx, ids_y, my, self_pairs: bool, nx=None, ny=None):
-    """Per-row top-k of x members over y candidates — the shared
-    selection core of the unsalted bucket kernel (x == y, self pairs
-    masked) and the salted triangle sub-buckets (disjoint x/y, both
-    directions). Returns (i, j, cos) numpy triples; the injective
+def _sim10_topk_block(tbl, band, x, y, self_pairs: bool):
+    """sim10's per-bucket block (the one lsh_tuning._bucket_kernel
+    calls): per-row top-k of x members over y candidates — self pairs
+    masked in self mode; in cross mode (two disjoint salt groups) BOTH
+    directions, since each unordered (i, j) meets in exactly this one
+    sub-bucket. Returns lists of (i, j, cos) arrays; the injective
     skey (4dp-quantized cosine << 40 | bit-flipped j) makes every
     selection decision exact-integer with smaller-j tie preference —
     identical to the merge window's ORDER BY, so a salted run's
     per-sub-bucket selections union to the unsalted bucket's picks.
-    ``nx``/``ny`` are the paired norms from arrowkit.cosine_prep —
-    None for the pre-normalized float path (the historical matmul),
-    float64 norms for the int8 verify payload (exact-integer dots,
-    normalize-after; see cosine_block)."""
+    Requires vec_id < 2^40 (ids are dense row numbers)."""
     import numpy as np
 
     from quacfka_spark.operators.arrowkit import cosine_block
 
-    jkey = (1 << 40) - 1 - ids_y
-    n_y = len(ids_y)
-    k = min(_SIM10_K, n_y - (1 if self_pairs else 0))
-    if k <= 0:
-        return [], [], []
     oi, oj, oc = [], [], []
-    for lo in range(0, len(ids_x), _SIM10_CHUNK):
-        hi = min(lo + _SIM10_CHUNK, len(ids_x))
-        with np.errstate(invalid="ignore"):
-            cos = cosine_block(mx, nx, my, ny, lo, hi)  # chunk x |y|
-        # cosq: quantization-ready copy (NaN -> -2, diagonal -> -3);
-        # emission always indexes the ORIGINAL cos. NaN cosines
-        # (zero-norm embeddings) are never emitted by EITHER branch —
-        # without the mask, small buckets emitted NaN edges (ranked
-        # first by ORDER BY cos DESC in both engines) while large
-        # buckets pruned them: divergence by bucket size.
-        cosq = np.nan_to_num(cos, nan=-2.0)
-        if self_pairs:
-            cosq[ids_x[lo:hi, None] == ids_y[None, :]] = -3.0
-        if n_y - (1 if self_pairs else 0) <= k:
-            # keep-all: fewer candidates than k. Threshold -1.5 drops
-            # BOTH sentinels — NaN cosines (zero-norm embeddings, -2)
-            # and the diagonal (-3) — so the keep-all branch and the
-            # sparse branch agree that NaN edges are never emitted
-            # (d07's below-threshold rule; real cosines are >= -1).
-            keep = cosq > -1.5
-            ii, jj = np.nonzero(keep)
-        else:
-            # SPARSE exact selection: the dense int64 skey build was
-            # ~60% of kernel time (5 full passes over chunk x |y|).
-            # A float partition finds the k-th value per row; any
-            # exact-key winner w satisfies cos(w) >= kth_f - 1e-4
-            # (otherwise every float-top-k entry has q at least one
-            # quantum above w's and outranks it), so the loose mask
-            # provably contains the exact winners; the injective
-            # integer key then picks the identical k per row among
-            # ~k candidates instead of |y|.
-            kth_f = np.partition(cosq, n_y - k, axis=1)[:, n_y - k]
-            ii, jj = np.nonzero(cosq >= (kth_f - 1.5e-4)[:, None])
-            # sign-aware half-away-from-zero quantization — the same
-            # rule as the merge window's F.round(cos, 4) and the
-            # oracle's ROUND (the repo-wide convention; see
-            # functions/vector.py quantize_q4).
-            q = quantize_q4(cosq[ii, jj])
-            skey = q * (1 << 40) + jkey[jj]
-            # rank within row by skey desc (rows of ii are sorted by
-            # construction of nonzero); keep the top k of each row
-            order = np.lexsort((-skey, ii))
-            ii, jj, skey = ii[order], jj[order], skey[order]
-            starts = np.zeros(len(ii), dtype=bool)
-            starts[0] = True
-            starts[1:] = ii[1:] != ii[:-1]
-            row_start = np.maximum.accumulate(
-                np.where(starts, np.arange(len(ii)), 0)
-            )
-            rank = np.arange(len(ii)) - row_start
-            sel = rank < k
-            ii, jj = ii[sel], jj[sel]
-            # a row whose candidates are mostly NaN can rank a -2
-            # sentinel into its top k; drop them to match keep-all
-            valid = cosq[ii, jj] > -1.5
-            ii, jj = ii[valid], jj[valid]
-        oi.append(ids_x[lo + ii])
-        oj.append(ids_y[jj])
-        oc.append(cos[ii, jj])
+    for (ids_x, mx, nx, _), (ids_y, my, ny, _) in (
+        [(x, y)] if self_pairs else [(x, y), (y, x)]
+    ):
+        jkey = (1 << 40) - 1 - ids_y
+        n_y = len(ids_y)
+        # k >= 1: the kernel passes >= 2 rows in self mode and two
+        # non-empty sides in cross mode
+        k = min(_SIM10_K, n_y - (1 if self_pairs else 0))
+        for lo in range(0, len(ids_x), _SIM10_CHUNK):
+            hi = min(lo + _SIM10_CHUNK, len(ids_x))
+            with np.errstate(invalid="ignore"):
+                cos = cosine_block(mx, nx, my, ny, lo, hi)  # chunk x |y|
+            # cosq: quantization-ready copy (NaN -> -2, diagonal -> -3);
+            # emission always indexes the ORIGINAL cos. NaN cosines
+            # (zero-norm embeddings) are never emitted by EITHER branch —
+            # without the mask, small buckets emitted NaN edges (ranked
+            # first by ORDER BY cos DESC in both engines) while large
+            # buckets pruned them: divergence by bucket size.
+            cosq = np.nan_to_num(cos, nan=-2.0)
+            if self_pairs:
+                cosq[ids_x[lo:hi, None] == ids_y[None, :]] = -3.0
+            if n_y - (1 if self_pairs else 0) <= k:
+                # keep-all: fewer candidates than k. Threshold -1.5 drops
+                # BOTH sentinels — NaN cosines (zero-norm embeddings, -2)
+                # and the diagonal (-3) — so the keep-all branch and the
+                # sparse branch agree that NaN edges are never emitted
+                # (d07's below-threshold rule; real cosines are >= -1).
+                keep = cosq > -1.5
+                ii, jj = np.nonzero(keep)
+            else:
+                # SPARSE exact selection: the dense int64 skey build was
+                # ~60% of kernel time (5 full passes over chunk x |y|).
+                # A float partition finds the k-th value per row; any
+                # exact-key winner w satisfies cos(w) >= kth_f - 1e-4
+                # (otherwise every float-top-k entry has q at least one
+                # quantum above w's and outranks it), so the loose mask
+                # provably contains the exact winners; the injective
+                # integer key then picks the identical k per row among
+                # ~k candidates instead of |y|.
+                kth_f = np.partition(cosq, n_y - k, axis=1)[:, n_y - k]
+                ii, jj = np.nonzero(cosq >= (kth_f - 1.5e-4)[:, None])
+                # sign-aware half-away-from-zero quantization — the same
+                # rule as the merge window's F.round(cos, 4) and the
+                # oracle's ROUND (the repo-wide convention; see
+                # functions/vector.py quantize_q4).
+                q = quantize_q4(cosq[ii, jj])
+                skey = q * (1 << 40) + jkey[jj]
+                # rank within row by skey desc (rows of ii are sorted by
+                # construction of nonzero); keep the top k of each row
+                order = np.lexsort((-skey, ii))
+                ii, jj, skey = ii[order], jj[order], skey[order]
+                starts = np.zeros(len(ii), dtype=bool)
+                starts[0] = True
+                starts[1:] = ii[1:] != ii[:-1]
+                row_start = np.maximum.accumulate(
+                    np.where(starts, np.arange(len(ii)), 0)
+                )
+                rank = np.arange(len(ii)) - row_start
+                sel = rank < k
+                ii, jj = ii[sel], jj[sel]
+                # a row whose candidates are mostly NaN can rank a -2
+                # sentinel into its top k; drop them to match keep-all
+                valid = cosq[ii, jj] > -1.5
+                ii, jj = ii[valid], jj[valid]
+            oi.append(ids_x[lo + ii])
+            oj.append(ids_y[jj])
+            oc.append(cos[ii, jj])
     return oi, oj, oc
 
 
@@ -1368,82 +1369,39 @@ def knn_edges(
     public so graph consumers (sim11 PageRank, composed pipelines) can
     build on the edge list without the presentation sort.
 
-    ``salt_groups=S > 1`` engages the d07 degenerate-bucket
-    mitigation, adapted to top-k: members of a hot (band, sig) bucket
-    split into S deterministic salt groups and every group PAIR
-    (pa <= pb) forms its own sub-bucket; each sub-bucket emits its
-    local top-k per member (both directions on off-diagonal pairs),
-    and because every neighbor j lives in exactly ONE sub-bucket with
-    i — where it faces fewer competitors than in the full bucket —
-    the union of local picks contains every full-bucket pick, and the
-    existing cross-band MAX-merge + rank window reduces the union to
-    the identical edge set (engine-tested set equality on a clustered
-    corpus). Cost: each banded row exchanges S times and per-member
-    candidate emission grows to <= S*k per band; per-task verify work
-    drops to ~(bucket/S)^2 and spreads over S(S+1)/2 tasks.
+    Runs the banded sign-LSH exchange of operators/lsh_tuning.py
+    (``_bucket_exchange`` states the salting, salt-first width and
+    int8-payload mechanism shared with d07); what is sim10's own:
 
-    ``auto=True`` replaces the manual pick with the cores-aware
-    chooser (lsh_tuning.choose_salt_topk): one cheap (band, sig)
-    count agg returns max occupancy (the 12,000-row engage gate —
-    benign corpora keep the replication-free S=1 plan) and the hot
-    bucket count, then S is the smallest salt giving hot_buckets *
-    S(S+1)/2 >= 40 * cores sub-bucket tasks. The top-k kernel's
-    optimal salt is occupancy-INVARIANT by measurement — salt 6 wins
-    at both 250k (45.7 s vs 83 s at S=2) and 1M (1110 s) probe
-    scales on 32 cores — because a sub-bucket's selection work
-    shrinks with its side while the task count grows; d07's pairs
-    kernel is the opposite (salt-invariant total work, so it uses
-    the minimal-adequate occupancy rule). The graph is identical
-    either way (the engine-tested salting invariant).
-
-    ``bits``/``bands`` parameterize the band family (d07's width
-    knob — see dedup._cosine_lsh_pairs): width bounds benign bucket
-    occupancy (~N/2^bits), which fixed 4-bit banding lets grow
-    linearly with the corpus. ``auto_bits=True`` runs the
-    occupancy-adaptive chooser on the banded frame before the
-    expensive exchange — SALT-FIRST: width engages only past the
-    salt knob's recall-free spreading budget (gate * MAX_SALT).
-    No ``auto_bands`` here, deliberately: the d07 recovery rule
-    anchors its collision model at the verify THRESHOLD, which a
-    top-k kernel doesn't have (the k-th neighbor similarity is
-    data-dependent), and the 250k sweep measured more bands buying
-    agreement (96.4% at 6x8 vs 90.7% at 6x4) at a wall cost that
-    cancels the width win (49.8s vs 46.3s at the 4-bit baseline) —
-    candidate emission grows k-per-member-per-BAND in this kernel,
-    unlike d07's band-dedup'd pairs. ``bands`` stays a documented
-    manual knob for callers who value agreement over wall. Width changes the CANDIDATE set, so sim10's
-    graph at a non-default width is checked by its own width-matched
-    oracle (the sim10w registered key at bits=6); edge-agreement vs
-    the 4-bit graph is measured in SCALE_PROBE_BITS_*.json.
-
-    ``verify_payload="int8"`` is d07's band-exchange footprint fix
-    (dedup._cosine_lsh_pairs) applied to the top-k kernel: the banded
-    replica ships round(127 * x / ||v||) as array<tinyint> (4x fewer
-    payload bytes per replica, the term salting multiplies by S) while
-    band signatures keep hashing the ORIGINAL float32 signs — the
-    CANDIDATE set is identical at any payload. Unlike d07's
-    thresholded pairs, top-k selection depends on cosine ORDER inside
-    each bucket, so quantization can swap adjacently-ranked neighbors
-    (|delta cos| <= ~2*sqrt(dim)/127 per edge) — the sim10q key
-    hash-matches an exact DuckDB oracle replicating the quantization,
-    and sim10qx certifies RANK STABILITY against the float graph
-    (every membership flip and rank swap must sit within the
-    quantization bound). The in-kernel matmul stays exact: integer
-    dots run on the float32 SGEMM fast path below dim 1041 and an
-    exact float64 DGEMM above (arrowkit.cosine_prep), and the
-    exact-integer skey selection logic is payload-agnostic.
-    MEASURED at 1M clustered vectors (r12,
-    SCALE_PROBE_SIM10_INT8_1M.json): banded exchange 2.01 GB vs
-    float's 4.98 (2.5x smaller — the term salting multiplies by S)
-    at +7.5% wall (807.9 vs 751.6 s; this kernel is selection-
-    dominated, so the smaller matmul does not pay for the
-    quantization pass) — ship int8 when the salted exchange is the
-    binding constraint, keep float32 otherwise."""
-    import numpy as np
-
+    - **Top-k with MAX merge** (``_sim10_topk_block``): each bucket
+      emits its local top-k per member; the cross-band MAX merge and
+      the rank window reduce the union to k edges per source. Under
+      salt every neighbor j meets i in exactly one sub-bucket, where it
+      faces fewer competitors than in the full bucket, so the union of
+      local picks contains every full-bucket pick and the graph is
+      identical (engine-tested on a clustered corpus); emission grows
+      to <= S*k per member per band.
+    - **Cores-aware salt rule** (``auto=True``,
+      lsh_tuning.choose_salt_topk): the 12,000-row occupancy gate keeps
+      benign corpora unsalted, and S is the smallest salt giving
+      hot_buckets * S(S+1)/2 >= 40 * cores sub-bucket tasks. The top-k
+      kernel's optimal salt is occupancy-invariant by measurement —
+      salt 6 wins at both 250k (45.7 s vs 83 s at S=2) and 1M (1110 s)
+      on 32 cores — unlike d07's salt-invariant total work.
+    - **No auto_bands**, deliberately: d07's recovery rule anchors its
+      collision model at a verify threshold a top-k kernel lacks, and
+      the 250k sweep measured more bands buying agreement (96.4% at
+      6x8 vs 90.7% at 6x4) at a wall cost that cancels the width win
+      (49.8 s vs 46.3 s at the 4-bit baseline) — emission grows k per
+      member per BAND here. ``bands`` stays a manual knob.
+    - **int8 rank stability**: top-k depends on cosine ORDER, so the
+      quantized payload can swap adjacently-ranked neighbors; sim10qx
+      certifies every membership flip and rank swap sits within the
+      quantization bound.
+    """
     from pyspark.sql.window import Window
 
-    from quacfka_spark.operators.lsh_tuning import sign_band_cols
+    from quacfka_spark.operators import lsh_tuning as lt
 
     t = load_views(spark, sf_dir)
     # NULL embeddings drop on both sides (oracle bands WHERE NOT NULL):
@@ -1453,197 +1411,25 @@ def knn_edges(
     # kernel widens after the shuffle — bit-exact, see arrowkit.
     e = t["embeddings"].filter(F.col("embedding").isNotNull())
 
-    def _banded_from(frame, ship, b_: int) -> DataFrame:
-        # sigs from the ORIGINAL float column (identical candidate set
-        # at any payload); the shipped column keeps the name
-        # "embedding" so the kernels and salted replication are
-        # payload-agnostic
-        return frame.select(
-            "vec_id",
-            ship.alias("__emb"),
-            F.posexplode_outer(
-                F.array(*sign_band_cols(b_, bands))
-            ).alias("band", "sig"),
-        ).withColumnRenamed("__emb", "embedding").select(
-            "vec_id", "embedding", "band", "sig"
-        )
-
-    def _banded(b_: int) -> DataFrame:
-        # CHOOSER face: always the float payload. mapInArrow is a
-        # column-pruning barrier, so banding the quantized frame here
-        # would make every narrow chooser agg (occupancy counts, the
-        # n/dim agg) pay a full quantization pass it doesn't need
-        # (r12 advisor); the quantizer applies only to the final
-        # banded frame below. Chooser results are payload-invariant
-        # by construction — occupancy depends only on the sigs, which
-        # hash the float column under either payload.
-        return _banded_from(e, F.col("embedding"), b_)
-
     if auto_bits:
-        from quacfka_spark.operators.lsh_tuning import (
-            MAX_SALT,
-            SIM10_TARGET_ROWS,
-            choose_band_bits_measured,
+        # the measured occupancy is NOT reused for the salt pick:
+        # choose_salt_topk needs the hot-bucket COUNT, which the width
+        # chooser's max-only agg doesn't compute
+        bits, _occ, _dim = lt._measured_width(
+            e, bits, bands, lt.SIM10_TARGET_ROWS, auto=auto, salt=salt_groups
         )
-
-        n_vecs, dim = e.agg(
-            F.count(F.lit(1)), F.min(F.size("embedding"))
-        ).first()
-        if n_vecs and dim:
-            # min_bits=bits: a caller-configured width is the FLOOR
-            # (see d07). The measured occupancy is NOT reused for the
-            # salt pick: choose_salt_topk needs the hot-bucket COUNT,
-            # which the width chooser's max-only agg doesn't compute —
-            # its one extra narrow agg below is the documented cost.
-            # max_salt mirrors the salt plan that actually runs (see
-            # d07): a manual/disabled salt must not inflate the width
-            # budget with spreading that never engages.
-            bits, _occ = choose_band_bits_measured(
-                _banded,
-                int(n_vecs),
-                dim=int(dim),
-                bands=bands,
-                target_rows=SIM10_TARGET_ROWS,
-                min_bits=bits,
-                max_salt=MAX_SALT if auto else max(1, int(salt_groups)),
-            )
-
-    if verify_payload == "int8":
-        # one vectorized Arrow pass appends q8 = round(127*x/||v||)
-        # tinyints BEFORE banding (the d07q mechanism; see
-        # functions/vector.with_int8_embedding for why this is not a
-        # Catalyst transform — the inlined norm fold re-evaluates per
-        # element and per banded/salted replica, ~10-40x this wall).
-        # Applied ONLY to the final banded frame, after the width
-        # chooser and never seen by the salt chooser (r12 advisor:
-        # keep the choosers' cheap-narrow-agg contract). Zero-norm
-        # vectors quantize to zeros -> 0/0 = NaN cosine in the
-        # kernel, the same never-ranked sentinel as their float NaN
-        # behavior.
-        from quacfka_spark.functions.vector import with_int8_embedding
-
-        banded = _banded_from(with_int8_embedding(e), F.col("q8"), bits)
-    else:
-        banded = _banded(bits)
-
-    def bucket_topk(key, tbl):
-        from quacfka_spark.operators.arrowkit import (
-            cosine_prep,
-            list_matrix,
-            np_col,
-            pairs_table,
-        )
-
-        m = len(tbl)
-        if m < 2:
-            return pairs_table()
-        ids = np_col(tbl, "vec_id")
-        # dtype=None keeps the stored payload (float32 default, int8
-        # quantized); cosine_prep normalizes floats up front (the
-        # historical arithmetic, bit-exact) / keeps int8 ints for the
-        # exact-SGEMM normalize-after path — see arrowkit
-        mat, nrms = cosine_prep(list_matrix(tbl, "embedding", dtype=None))
-        # injective descending sort key: 4dp-quantized cosine in the
-        # high bits, bit-flipped neighbor id below (prefer smaller j on
-        # quantized ties). |q| <= 20001 so q << 40 stays far inside
-        # int64; requires vec_id < 2^40 (true by fixture/probe
-        # construction — ids are dense row numbers).
-        oi, oj, oc = _sim10_topk_block(
-            ids, mat, ids, mat, True, nx=nrms, ny=nrms
-        )
-        if not oi:
-            return pairs_table()
-        return pairs_table(
-            np.concatenate(oi), np.concatenate(oj), np.concatenate(oc)
-        )
-
-    def bucket_topk_salted(key, tbl):
-        from quacfka_spark.operators.arrowkit import (
-            cosine_prep,
-            list_matrix,
-            np_col,
-            pairs_table,
-        )
-
-        _band, _sig, sa, sb = (x.as_py() for x in key)
-        ids_all = np_col(tbl, "vec_id")
-        mat_all, nrms_all = cosine_prep(
-            list_matrix(tbl, "embedding", dtype=None)
-        )
-        if sa == sb:
-            if len(tbl) < 2:
-                return pairs_table()
-            oi, oj, oc = _sim10_topk_block(
-                ids_all, mat_all, ids_all, mat_all, True,
-                nx=nrms_all, ny=nrms_all,
-            )
-        else:
-            slt = np_col(tbl, "slt")
-            xm, ym = slt == sa, slt == sb
-            if not xm.any() or not ym.any():
-                return pairs_table()
-            ix, mx = ids_all[xm], mat_all[xm]
-            iy, my = ids_all[ym], mat_all[ym]
-            nx = nrms_all[xm] if nrms_all is not None else None
-            ny = nrms_all[ym] if nrms_all is not None else None
-            # BOTH directions: candidates for an x member among the y
-            # group AND vice versa — each unordered (i, j) meets in
-            # exactly this one sub-bucket
-            oi, oj, oc = _sim10_topk_block(ix, mx, iy, my, False, nx=nx, ny=ny)
-            oi2, oj2, oc2 = _sim10_topk_block(
-                iy, my, ix, mx, False, nx=ny, ny=nx
-            )
-            oi, oj, oc = oi + oi2, oj + oj2, oc + oc2
-        if not oi:
-            return pairs_table()
-        return pairs_table(
-            np.concatenate(oi), np.concatenate(oj), np.concatenate(oc)
-        )
-
     if auto:
-        from quacfka_spark.operators.lsh_tuning import (
-            SIM10_TARGET_ROWS,
-            choose_salt_topk,
-        )
-
-        # chooser aggregates run on the FLOAT banded face, never the
-        # quantized frame (r12 advisor) — occupancy is payload-
-        # invariant (sigs hash the float column under either payload)
-        salt_groups = choose_salt_topk(
-            _banded(bits),
-            SIM10_TARGET_ROWS,
+        salt_groups = lt.choose_salt_topk(
+            lt._banded(e, "float32", bits, bands),
+            lt.SIM10_TARGET_ROWS,
             spark.sparkContext.defaultParallelism,
         )
-
-    if salt_groups > 1:
-        S = int(salt_groups)
-        pair_structs = [
-            F.struct(
-                F.least(F.col("slt"), F.lit(y)).alias("pa"),
-                F.greatest(F.col("slt"), F.lit(y)).alias("pb"),
-            )
-            for y in range(S)
-        ]
-        rep = (
-            banded.withColumn(
-                "slt", F.pmod(F.xxhash64("vec_id"), F.lit(S))
-            )
-            .select(
-                "vec_id", "embedding", "band", "sig", "slt",
-                F.explode(F.array(*pair_structs)).alias("p"),
-            )
-            .select(
-                "vec_id", "embedding", "band", "sig", "slt",
-                F.col("p.pa"), F.col("p.pb"),
-            )
-        )
-        local = rep.groupBy("band", "sig", "pa", "pb").applyInArrow(
-            bucket_topk_salted, schema="i bigint, j bigint, cos double"
-        )
-    else:
-        local = banded.groupBy("band", "sig").applyInArrow(
-            bucket_topk, schema="i bigint, j bigint, cos double"
-        )
+    # top-k needs no signature array: projecting it away prunes it
+    # from the band exchange
+    banded = lt._banded(e, verify_payload, bits, bands).select(
+        "vec_id", "embedding", "band", "sig"
+    )
+    local = lt._bucket_exchange(banded, salt_groups, _sim10_topk_block)
     # cross-band dedup: the same edge from two buckets carries the same
     # cosine up to BLAS accumulation ulps; MAX picks deterministically
     # and 4dp rounding erases the difference before ranking.

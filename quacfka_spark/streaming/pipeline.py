@@ -411,14 +411,21 @@ class StreamingPipeline:
         # O(1) membership, the list stays the ordered in-process feed.
         self._published: set[str] = set()
         if os.path.exists(self._paths_log):
-            with open(self._paths_log) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        try:
-                            self._published.add(json.loads(line)["path"])
-                        except (json.JSONDecodeError, KeyError):
-                            continue  # torn tail write from a crash
+            with open(self._paths_log, "rb+") as fh:
+                data = fh.read()
+                # a crash mid-append leaves a torn last line: cut the
+                # file back to its last newline, or the next publish
+                # appends onto the fragment and that record never
+                # parses again (for this set or for feed readers)
+                end = data.rfind(b"\n") + 1
+                if end < len(data):
+                    fh.truncate(end)
+            for line in data[:end].decode().splitlines():
+                if line.strip():
+                    try:
+                        self._published.add(json.loads(line)["path"])
+                    except (json.JSONDecodeError, KeyError):
+                        continue  # merged by a pre-repair torn write
         self._bytes_per_record: dict[str, float] = {}  # D15 size feedback
         self._ledger_root = os.path.join(config.output_dir, "_dedup_ledger")
         self._neardup_root = os.path.join(config.output_dir, "_neardup_ledger")

@@ -433,7 +433,7 @@ def test_window_class_marker():
     ev = stall_evidence([9.8], 9.5, [0.99], [0.0])
     assert "window" not in ev
     assert window_class([None], [None], None) is None
-    # single-pass probe-row form (tools/bits_probe.py, r12 verdict #2)
+    # single-pass probe-row form (tools/stream_fixed_cost.py; r12 verdict #2)
     assert window_class([0.95], [0.0], [0.93]) == "clean"
     assert window_class([0.99], [0.0], [0.6]) == "contended"
 

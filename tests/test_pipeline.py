@@ -584,3 +584,32 @@ def test_sustained_multi_epoch_streaming_report(spark):
     assert max(rates) <= 20 * min(rates)  # sanity, not a perf assertion
     assert rep["steady_median_rows_per_second"] > 0
     assert isinstance(rep["flat_within_20pct"], bool)
+
+
+def test_completed_feed_torn_tail_repaired_on_open(spark, tmp_path):
+    """A crash mid-append leaves a torn last line in the completed-path
+    feed. Opening a pipeline must cut the file back to its last newline:
+    otherwise the next publish appends onto the fragment, that record
+    never parses again, and the following restart (and every external
+    feed reader) loses the path."""
+    out = str(tmp_path / "out")
+    log = os.path.join(out, "_completed", "paths.jsonl")
+    os.makedirs(os.path.dirname(log))
+    with open(log, "w") as fh:
+        fh.write(json.dumps({"epoch": 0, "table": "m", "path": "/p/0"}) + "\n")
+        fh.write('{"epoch": 1, "table": "m", "pa')  # torn by a crash
+    inp = str(tmp_path / "in")
+    os.makedirs(inp)
+    cfg = PipelineConfig(output_dir=out, dest_table="m")
+
+    def open_pipeline():
+        source = spark.readStream.schema("value binary").parquet(inp)
+        return StreamingPipeline(spark, source, cfg)
+
+    pipe = open_pipeline()
+    assert pipe._published == {"/p/0"}
+    pipe._publish_path("/p/1", 1, "m")
+    assert open_pipeline()._published == {"/p/0", "/p/1"}
+    with open(log) as fh:
+        lines = fh.read().splitlines()
+    assert [json.loads(ln)["path"] for ln in lines] == ["/p/0", "/p/1"]

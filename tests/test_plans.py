@@ -1044,3 +1044,28 @@ def test_int8_band_exchange_ships_tinyint(plans):
         assert any(
             "embedding:array<float" in s for s in read_schemas(p)
         ), (key, read_schemas(p))
+
+
+def test_band_exchange_payload_columns(plans):
+    """The one (band, sig) exchange carries exactly the columns its
+    bucket kernel reads: d07's min-band dedup needs the full signature
+    array, sim10's top-k does not — so the banded frame both families
+    share must not leak ``sigs`` into sim10's shuffle. (The grouped-map
+    node prepends its own copy of the grouping keys.)"""
+    want = {
+        "d07_cosine_lsh_pairs": ["vec_id", "embedding", "sigs", "band", "sig"],
+        "d07q_int8_verify_pairs": ["vec_id", "embedding", "sigs", "band", "sig"],
+        "sim10_knn_graph": ["vec_id", "embedding", "band", "sig"],
+        "sim10q_int8_knn_graph": ["vec_id", "embedding", "band", "sig"],
+    }
+    for key, cols in want.items():
+        band_inputs = [
+            [re.sub(r"#\d+L?$", "", c.strip()) for c in inp.split(",")]
+            for inp, part in re.findall(
+                r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\n"
+                r"Arguments: hashpartitioning\(([^)]*)\)",
+                plans(key),
+            )
+            if "band#" in part and "sig#" in part
+        ]
+        assert band_inputs == [["band", "sig"] + cols], (key, band_inputs)
