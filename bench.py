@@ -24,6 +24,8 @@ from quacfka_spark.registry import get_queries
 from quacfka_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# timed passes per headline query; the line reports the best
+PASSES = 2
 
 # Headline set: one per operator family — scan/agg, joins, window, explode,
 # streaming-batch, text, dedup (exact + LSH), similarity, multimodal.
@@ -159,11 +161,11 @@ def _compact_ingest(rep: dict, wide: bool = False) -> dict:
         return {
             k: (v[:80] if isinstance(v, str) else v) for k, v in rep.items()
         }
-    # rows/s only: duration lives in BENCH_STATS.json — every byte
-    # here competes with per-query detail for the 2000-char driver
-    # capture. The WIDE blocks additionally carry MB/s + bytes/record:
-    # byte parity with the reference's published 501 MB/s at
-    # ~1.27 KB/record is the round-7 headline claim.
+    # rates only: duration and pass walls live in BENCH_STATS.json —
+    # every byte here competes with per-query detail for the 2000-char
+    # driver capture. The WIDE blocks additionally carry MB/s +
+    # bytes/record: byte parity with the reference's published 501 MB/s
+    # at ~1.27 KB/record.
     out = {
         "total_rows_per_second": round(rep["total_rows_per_second"]),
         "records_per_second": round(rep["records_per_second"]),
@@ -171,41 +173,6 @@ def _compact_ingest(rep: dict, wide: bool = False) -> dict:
     if wide:
         out["mb_per_second"] = round(rep.get("mb_per_second", 0.0), 1)
         out["bytes_per_record"] = round(rep.get("bytes_per_record", 0.0))
-    # window class (r12 verdict #3): the one-word marker that makes
-    # cross-round ingest numbers comparable at a glance (BENCH_r11 wide
-    # 173.6 vs BENCH_r12 825.9 was window class, not code). ~12 bytes
-    # per block; per-pass detail stays in BENCH_STATS.json.
-    if rep.get("window"):
-        out["window"] = rep["window"]
-    # Stall evidence (r10 verdict #1): when a block's best pass exceeded
-    # 2x its rate-derived expectation — or its samples scattered — the
-    # per-pass walls ride the line so the artifact itself shows whether
-    # the published number is engine capability or a host-stall floor.
-    # Full per-pass busy/steal detail stays in BENCH_STATS.json.
-    ps = rep.get("pass_seconds") or []
-    scattered = len(ps) > 1 and max(ps) - min(ps) > max(1.0, 0.5 * min(ps))
-    if rep.get("stalled"):
-        out["stalled"] = 1
-    if rep.get("stalled") or scattered:
-        out["ps"] = [round(t, 1) for t in ps[:8]]
-        if "expected_pass_s" in rep:
-            out["exp_s"] = round(rep["expected_pass_s"], 1)
-        steals = [s for s in rep.get("pass_steal") or [] if s is not None]
-        if steals and max(steals) >= 0.05:
-            out["steal"] = round(100 * max(steals))
-    # co-tenant attribution (r11 #5): host CPU the bench tree did not
-    # consume. A block can be unstalled-and-unscattered yet rate-
-    # compressed by a co-tenant (BENCH_r11's wide batch: busy 0.99,
-    # 173.6 MB/s vs 427.7 for the identical workload in a busy-0.65
-    # window) — surface the max per-pass other-load % whenever the
-    # engine ran against a materially shared host.
-    others = [o for o in rep.get("pass_other") or [] if o is not None]
-    if others and max(others) >= 0.10:
-        out["other"] = round(100 * max(others))
-    if rep.get("resized"):
-        # the stalled-calibration guard fired and re-sized the run —
-        # the number is from the re-generated full-size passes
-        out["resized"] = 1
     return out
 
 
@@ -231,16 +198,9 @@ def build_headline_line(
     (slowest kept individually, fast tail folded into "_others") until
     it fits LINE_BUDGET. The headline value is always the full sum.
 
-    ``spread`` is the window-noise evidence block (see main): it rides
-    the parsed line so a stall-heavy driver window is distinguishable
-    from a code regression FROM THE ARTIFACT ALONE — med_total/value
-    near 1.0 means the samples agree (clean window); a large ratio
-    means the non-best samples carry multi-second stalls, and
-    spread.stalls names WHICH queries' samples scattered (per-sample
-    wall times, so the stalled sample is identifiable by eye). When the
-    line overflows, stalls is the FIRST evidence dropped — before any
-    query-map folding — so window noise can never evict per-query
-    entries (stalls also lives in BENCH_STATS.json)."""
+    ``spread`` (see main) rides the parsed line: med_total/value near
+    1.0 means the two passes agree; a large ratio means one pass of
+    some queries ran slow."""
     headline = {
         "metric": "headline_query_wall_time",
         "value": round(sum(timings.values()), 4) if value is None else value,
@@ -271,16 +231,6 @@ def build_headline_line(
         ),
     }
     line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > LINE_BUDGET and spread and "stalls" in spread:
-        # stall detail is secondary evidence (full copy in
-        # BENCH_STATS.json) — shed it BEFORE folding the query map, so a
-        # noisy window (large stalls block) can never evict per-query
-        # entries that fit in a clean window: r13's driver PERF diff read
-        # 8 fold-evicted queries as "dropped_from_bench" (r13 verdict #4).
-        headline["spread"] = {
-            k: v for k, v in spread.items() if k != "stalls"
-        }
-        line = json.dumps(headline, separators=(",", ":"))
     keep_n = 40
     while len(line) > LINE_BUDGET and keep_n >= 0:
         keep = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:keep_n])
@@ -340,9 +290,9 @@ def main() -> None:
             )
             stdout = proc.stdout
         except subprocess.TimeoutExpired as te:
-            # the subprocess emits a complete JSON line after EACH phase,
-            # so a kill mid-streaming still leaves the batch numbers on
-            # the last complete line
+            # the subprocess emits a complete JSON line after EACH block,
+            # so a kill mid-run still leaves the finished blocks on the
+            # last complete line
             stdout = (te.stdout or b"")
             if isinstance(stdout, bytes):
                 stdout = stdout.decode("utf-8", "replace")
@@ -377,12 +327,11 @@ def main() -> None:
     queries["q01_scan_count"](spark, SF_DIR).collect()
     queries["q04_hash_agg"](spark, SF_DIR).collect()
 
-    # Best-of-N per query (default 2): single-shot numbers on a shared
-    # machine swing 2-4x with JIT/GC/page-cache state; the min of two
-    # passes is the steady-state throughput the reference's warm
-    # benchmark reports. Pass 1 is a full cold sweep, so plan+codegen
-    # time still shows up there if a query never gets faster.
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
+    # Best of PASSES per query: single-shot numbers on a shared machine
+    # swing 2-4x with JIT/GC/page-cache state; the min of two passes is
+    # the steady-state throughput the reference's warm benchmark
+    # reports. Pass 1 is a full cold sweep, so plan+codegen time still
+    # shows up there if a query never gets faster.
     samples: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
 
@@ -407,30 +356,10 @@ def main() -> None:
         samples.setdefault(name, []).append(t)
         print(f"# {name}: {t:.3f}s", file=sys.stderr)
 
-    for _ in range(max(1, passes)):
+    for _ in range(PASSES):
         for name in HEADLINE:
             if name not in errors:
                 time_one(name)
-
-    # Targeted third sample for the queries that dominate the total
-    # (round-8 verdict ask #2): this host shows random multi-10s stalls
-    # that can straddle BOTH full passes of the same query, making a
-    # stall-heavy window indistinguishable from a regression in the
-    # committed artifact. The top-N slowest get one more sample taken
-    # minutes later in the window; together with the "spread" block
-    # below (sum-of-medians vs sum-of-mins) the artifact itself shows
-    # whether the samples agree (clean window) or scatter (stalls).
-    hot_n = int(os.environ.get("SPARK_GRAFT_BENCH_HOT_RERUN", "12"))
-    hot = [
-        n
-        for n, _ in sorted(
-            ((n, min(ts)) for n, ts in samples.items()),
-            key=lambda kv: -kv[1],
-        )[:hot_n]
-        if n not in errors
-    ]
-    for name in hot:
-        time_one(name)
 
     # Headline number stays best-of-N (steady-state throughput on a VM
     # with 2-4x run-to-run swing), but median/max ride along per query so
@@ -453,35 +382,14 @@ def main() -> None:
     sf_str = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf = float(sf_str) if sf_str.replace(".", "").isdigit() else sf_str
     value = round(sum(min(ts) for ts in samples.values()), 4)
-    # Window-noise evidence (rides the parsed line): med_total is the
-    # sum of per-query MEDIANS, max_total of maxes, rerun the size of
-    # the targeted third pass. med_total/value ~ 1.0-1.15 = samples
-    # agree (clean window, value is trustworthy); >> 1.2 = the window
-    # carried stalls and value is the stall-free floor. "stalls"
-    # (round-9 verdict #4) NAMES the scattered queries so the
-    # artifact says WHICH samples stalled, not only that some did:
-    # per-sample wall times (1dp) for every query whose spread
-    # max-min exceeds max(1 s, 50% of its best) — a [1.2, 14.8, 1.3]
-    # entry is one stalled middle sample, while uniformly slow
-    # samples (a regression, not a stall) never appear here. Capped
-    # at the 6 widest so the line stays inside LINE_BUDGET.
-    stalled = {
-        n: [round(t, 1) for t in ts]
-        for n, ts in samples.items()
-        if max(ts) - min(ts) > max(1.0, 0.5 * min(ts))
-    }
-    stalled = dict(
-        sorted(
-            stalled.items(), key=lambda kv: min(kv[1]) - max(kv[1])
-        )[:6]
-    )
+    # Pass-agreement evidence (rides the parsed line): med_total is the
+    # sum of per-query MEDIANS, max_total of maxes; med_total/value near
+    # 1.0 means the passes agree and value is trustworthy.
     spread = {
         "med_total": round(
             sum(statistics.median(ts) for ts in samples.values()), 1
         ),
         "max_total": round(sum(max(ts) for ts in samples.values()), 1),
-        "rerun": len(hot),
-        **({"stalls": stalled} if stalled else {}),
     }
 
     # Full detail (per-query best/median/max + untrimmed ingest reports)

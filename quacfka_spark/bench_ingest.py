@@ -30,12 +30,19 @@ Scale: every stage here is a narrow map (decode, explode, write) — no
 shuffle at all — so the pipeline scales linearly with executors; the
 only coordination is the write commit. That is the same shape as the
 reference (independent worker pools, no cross-worker exchange).
+
+Fixed work: each shape has one fixed row count (``PayloadShape.rows``)
+and every block runs ``PASSES`` timed passes after a fixed warm-up.
+The work does not adapt to the host: like the reference's fixed run
+sampled in metrics.go, a slow host shows up as a lower rate, never as
+a different amount of work.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import statistics
 import time
 
 from pyspark.sql import SparkSession
@@ -46,16 +53,6 @@ from typing import Callable
 
 from quacfka_spark.sources.mock import NESTED_SCHEMA, nested_payload
 from quacfka_spark.sources.proto_wire import Field, MessageSpec
-
-DEFAULT_ROWS = int(os.environ.get("SPARK_GRAFT_INGEST_ROWS", "4000000"))
-# The wide shape's row cap is higher (r11 #1, INGEST_WIDE_PASSCURVE.json):
-# the rate-vs-pass-length curve is still rising at the 4M-row cap
-# (427.7 -> 692.4 -> 764.0 MB/s at 0.75M/2.2M/4M rows in one clean
-# window; two-point fit asymptote ~930 MB/s with ~1.2 s fixed pass
-# cost), so a fast window sized to rate*12s was being CLIPPED by the
-# cap to ~6 s passes. 8M rows (~9.8 GB payload) only engages when the
-# measured rate supports it — slow windows still auto-size small.
-WIDE_MAX_ROWS = int(os.environ.get("SPARK_GRAFT_INGEST_WIDE_MAX", "8000000"))
 
 # protobuf twin of NESTED_SCHEMA (field order == struct field order, as
 # the encoder requires)
@@ -254,6 +251,9 @@ class PayloadShape:
     payload: Callable[[F.Column], F.Column]
     norm_fields: tuple[str, ...]
     norm_aliases: tuple[str, ...]
+    # rows per pass: sized on a 4-vCPU host so a batch pass takes
+    # roughly 5-10 s (measured walls in CHANGES.md)
+    rows: int
 
 
 SHAPES: dict[str, PayloadShape] = {
@@ -265,6 +265,7 @@ SHAPES: dict[str, PayloadShape] = {
         nested_payload,
         ("site.id", "user_id", "amount", "deals.id", "deals.kind"),
         ("site", "user_id", "amount", "deal_id", "deal_kind"),
+        5_000_000,
     ),
     # ~1.27 KB/record, 10 normalizer fields: byte parity with the
     # reference's published 501 MB/s run (README.md:154-167)
@@ -282,8 +283,13 @@ SHAPES: dict[str, PayloadShape] = {
             "user_id", "ts", "amount", "currency",
             "deal_id", "deal_kind",
         ),
+        600_000,
     ),
 }
+
+# timed passes per block; the report's rates come from the best pass
+# and the median pass rides along
+PASSES = 3
 
 
 def _codec(spark: SparkSession, shape: PayloadShape = SHAPES["small"]):
@@ -308,252 +314,6 @@ def _codec(spark: SparkSession, shape: PayloadShape = SHAPES["small"]):
         lambda m: F.encode(F.to_json(m), "utf-8"),
         lambda df: decode_json(df, shape.spec.spark_schema()),
     )
-
-# Wall-clock budget for the whole CLI run (bench.py gives the subprocess
-# 420 s). The host VM's effective CPU speed varies by several x between
-# runs (measured 3x swings in a loop microbenchmark), so fixed row
-# counts sometimes blow the budget; instead the bench CALIBRATES — time
-# a small pass, then size the measured run to fit the remaining budget.
-# Throughput (rows/s) stays comparable across sizes because every stage
-# is a narrow map with per-row cost.
-BUDGET_S = float(os.environ.get("SPARK_GRAFT_INGEST_BUDGET_S", "300"))
-_CALIB_ROWS = 500_000
-
-
-# ---------------------------------------------------------------------------
-# Stall evidence + rerun policy (r10 verdict #1).
-#
-# BENCH_r10 published two host-stall casualties as official numbers: the
-# narrow batch block at 309k total rows/s (r9: 6.46M — while the STREAMING
-# block in the same window did 2.56M on the same decode+write path) and
-# wide streaming at 35.0 MB/s (same-day driver-style rerun: 330.3). The
-# query side already had spread + targeted-rerun + stall markers
-# (bench.py); the ingest blocks had best-of-N but published whatever the
-# window gave with no way to tell a stalled artifact from a regression.
-# Three mechanisms close that, all decidable FROM THE ARTIFACT:
-#   1. per-pass evidence: every pass records wall seconds plus the host's
-#      /proc/stat busy fraction and hypervisor steal fraction over the
-#      pass — a stalled pass shows long wall with low busy or high steal,
-#      a regression shows long wall at full busy.
-#   2. rate-derived expectation: calibration (batch) or the sibling batch
-#      block's measured rate (streaming) predicts the pass wall; a block
-#      whose BEST pass exceeds 2x its expectation keeps sampling (up to a
-#      cap, inside the deadline) instead of publishing the stall —
-#      the exact policy bench.py's query rerun loop applies.
-#   3. calibration guards (batch): calibration is best-of-2 with a third
-#      sample on >2x scatter, and if the measured passes then run >2x
-#      FASTER than the calibrated rate (a stalled calibration undersized
-#      the run — the r10 narrow-batch failure mode: 500k-row floor,
-#      fixed costs dominate), the run is re-sized and re-generated once.
-# ---------------------------------------------------------------------------
-
-
-def _cpu_jiffies() -> tuple[int, int, int] | None:
-    """(busy, steal, total) jiffies from /proc/stat's aggregate cpu line.
-    busy = user+nice+system+irq+softirq; steal is the hypervisor-runnable-
-    but-not-scheduled time — direct evidence of a noisy-neighbor stall.
-    None where /proc/stat is unavailable (non-Linux)."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()
-        if parts[0] != "cpu":
-            return None
-        vals = [int(x) for x in parts[1:9]]  # user..steal
-        busy = vals[0] + vals[1] + vals[2] + vals[5] + vals[6]
-        steal = vals[7] if len(vals) > 7 else 0
-        return busy, steal, sum(vals)
-    except Exception:  # pragma: no cover — non-Linux fallback
-        return None
-
-
-def _tree_jiffies() -> int | None:
-    """CPU jiffies consumed by THIS process tree (the bench driver plus
-    its live JVM / daemon children) — one /proc walk. Paired with
-    _cpu_jiffies it ATTRIBUTES host busy time: busy the tree did not
-    consume is co-tenant load, the r11 failure mode the stall
-    detector's rate expectation cannot see (a co-tenant slows the
-    calibration and the measured passes equally, so the block reads
-    `stalled:false, busy 0.99` while publishing a fraction of the
-    engine's healthy-window rate — BENCH_r11's wide batch 173.6 vs the
-    same workload's 427.7 in a busy-0.65 window,
-    INGEST_WIDE_PASSCURVE.json). None where /proc is unavailable.
-
-    Each process contributes utime+stime (its own burn) PLUS
-    cutime+cstime (burn of its already-REAPED children, which have no
-    /proc entry of their own) — so a subprocess that exits between the
-    two samples is not mis-billed to the co-tenants (r12 advisor): at
-    the first sample its time sits in its own utime/stime, at the
-    second in the reaping parent's cutime/cstime, and the DELTA the
-    caller computes counts it exactly once. No double-count while a
-    child is live either: cutime accumulates only on wait(), never
-    concurrently with the child's own /proc entry. Remaining blind
-    spot, inherent to sampling: a mid-interval exit of a process whose
-    own parent is OUTSIDE the tree (orphan re-parented to init) — none
-    of the bench's processes are spawned that way."""
-    try:
-        stats: dict[int, tuple[int, int]] = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    raw = fh.read()
-            except OSError:  # raced a process exit
-                continue
-            # comm may contain spaces/parens: fields resume after the
-            # LAST ')'; rest[1]=ppid, rest[11]=utime, rest[12]=stime,
-            # rest[13]=cutime, rest[14]=cstime (reaped-child time)
-            rest = raw[raw.rfind(")") + 2 :].split()
-            stats[int(d)] = (
-                int(rest[1]),
-                int(rest[11]) + int(rest[12])
-                + int(rest[13]) + int(rest[14]),
-            )
-        kids: dict[int, list[int]] = {}
-        for pid, (ppid, _) in stats.items():
-            kids.setdefault(ppid, []).append(pid)
-        total, stack, seen = 0, [os.getpid()], set()
-        while stack:
-            p = stack.pop()
-            if p in seen or p not in stats:
-                continue
-            seen.add(p)
-            total += stats[p][1]
-            stack.extend(kids.get(p, []))
-        return total
-    except Exception:  # pragma: no cover — non-Linux fallback
-        return None
-
-
-def _timed(fn):
-    """Run fn() recording wall seconds and the host CPU picture over the
-    interval. Returns (wall, busy_frac, steal_frac, own_frac,
-    fn_result); fractions are None when /proc is unavailable. own_frac
-    is the share of total host CPU capacity consumed by THIS process
-    tree — busy minus own is co-tenant load (see _tree_jiffies)."""
-    c0 = _cpu_jiffies()
-    o0 = _tree_jiffies()
-    t0 = time.perf_counter()
-    ret = fn()
-    wall = time.perf_counter() - t0
-    c1 = _cpu_jiffies()
-    o1 = _tree_jiffies()
-    busy = steal = own = None
-    if c0 is not None and c1 is not None and c1[2] > c0[2]:
-        dt = c1[2] - c0[2]
-        busy = (c1[0] - c0[0]) / dt
-        steal = (c1[1] - c0[1]) / dt
-        if o0 is not None and o1 is not None:
-            own = (o1 - o0) / dt
-    return wall, busy, steal, own, ret
-
-
-def window_class(
-    busys: list[float | None],
-    steals: list[float | None],
-    owns: list[float | None] | None,
-) -> str | None:
-    """One-word host-window marker for a measured block (r12 verdict
-    #3): ``contended`` when any pass shows material co-tenant load
-    (pass_other = busy - own >= 0.15) or hypervisor steal (>= 0.05),
-    ``clean`` otherwise. None when the attribution evidence is absent
-    (no /proc, or own-tree jiffies unavailable) — an UNCLASSIFIED
-    window must not read as clean. Makes cross-round comparisons
-    legible at a glance (BENCH_r11 wide batch 173.6 vs BENCH_r12 825.9
-    was window class, not code — provable only by reading the per-pass
-    arrays before this field existed). Thresholds sit above the
-    attribution's own noise floor (pass_other emission gates at 0.10;
-    the r11 co-tenant signature measured 0.3-0.6) and below any level
-    that materially moves a rate. Pure function (unit-tested without
-    Spark)."""
-    others = [
-        b - o
-        for b, o in zip(busys, owns or [])
-        if b is not None and o is not None
-    ]
-    if not others:
-        return None
-    steals_known = [s for s in steals if s is not None]
-    contended = max(others) >= 0.15 or (
-        bool(steals_known) and max(steals_known) >= 0.05
-    )
-    return "contended" if contended else "clean"
-
-
-def stall_evidence(
-    walls: list[float],
-    expected_s: float | None,
-    busys: list[float | None],
-    steals: list[float | None],
-    owns: list[float | None] | None = None,
-) -> dict:
-    """The per-pass evidence block every ingest report carries (r10
-    verdict #1): all pass walls (not just the best), the rate-derived
-    expectation, host busy/steal fractions per pass, and a ``stalled``
-    verdict — true when even the best pass exceeded 2x expectation, i.e.
-    the published number is a floor the window never let the engine
-    reach. ``owns`` (r11 #5) is the bench tree's own share of host CPU
-    per pass; when host busy materially exceeds it, a ``pass_other``
-    co-tenant attribution rides along. Pure function (unit-tested
-    without Spark)."""
-    ev: dict = {
-        "pass_seconds": [round(w, 2) for w in walls],
-    }
-    if expected_s is not None:
-        ev["expected_pass_s"] = round(expected_s, 2)
-        ev["stalled"] = min(walls) > 2.0 * expected_s
-    if any(b is not None for b in busys):
-        ev["pass_busy"] = [
-            round(b, 2) if b is not None else None for b in busys
-        ]
-    if any(s is not None and s >= 0.005 for s in steals):
-        # steal is zero on a healthy window — only worth bytes when seen
-        ev["pass_steal"] = [
-            round(s, 2) if s is not None else None for s in steals
-        ]
-    if owns is not None and any(
-        b is not None and o is not None and (b - o) >= 0.10
-        for b, o in zip(busys, owns)
-    ):
-        # co-tenant attribution (r11's wide decline): host busy the
-        # bench tree did NOT consume. Emitted only when material —
-        # a pass_other of e.g. 0.4 says the published rate was
-        # measured against a host nearly half-consumed by someone
-        # else, which no rate expectation can flag (calibration slows
-        # equally) and busy alone cannot distinguish from healthy
-        # saturation.
-        ev["pass_other"] = [
-            round(max(b - o, 0.0), 2)
-            if b is not None and o is not None
-            else None
-            for b, o in zip(busys, owns)
-        ]
-    # the one-field cross-round marker (r12 verdict #3) — emitted
-    # whenever the attribution evidence exists, NOT just when
-    # pass_other crossed its 0.10 materiality gate: a clean window
-    # should say "clean", not stay silent
-    wc = window_class(busys, steals, owns)
-    if wc is not None:
-        ev["window"] = wc
-    return ev
-
-
-def should_rerun_stalled(
-    walls: list[float],
-    expected_s: float | None,
-    cap: int,
-    deadline: float | None,
-) -> bool:
-    """Rerun gate: best pass > 2x the rate-derived expectation, room
-    under the pass cap, and the next pass (estimated at the CURRENT best
-    wall, capped) still fits the deadline. Mirrors bench.py's query
-    rerun loop; the estimate uses the best pass so a stalled sample
-    can't lock itself in by inflating the estimate (the r6 lesson)."""
-    if expected_s is None or len(walls) >= cap or deadline is None:
-        return False
-    if min(walls) <= 2.0 * expected_s:
-        return False
-    return time.monotonic() + min(min(walls), 60.0) < deadline
 
 
 def _gen_bytes(
@@ -584,23 +344,47 @@ def _gen_bytes(
     return float(mb)
 
 
+def _pass_report(
+    walls: list[float], consumed: int, raw_n: int, norm_n: int, mb: float
+) -> dict:
+    """Rates of the best pass, the median pass's total rate and every
+    pass wall. The best pass is the reference's estimator too: its
+    published rate is the best steady-state 30 s sample of a 5-minute
+    run (metrics.go:101-166)."""
+    pass_s = [round(w, 3) for w in walls]
+    best, med = min(pass_s), statistics.median(pass_s)
+    total = raw_n + norm_n
+    return {
+        "duration_seconds": best,
+        "records_per_second": round(raw_n / best, 2),
+        "total_rows_per_second": round(total / best, 2),
+        "median_total_rows_per_second": round(total / med, 2),
+        "mb_per_second": round(mb / best, 2),
+        "bytes_per_record": round(mb * 1024 * 1024 / max(consumed, 1), 1),
+        "passes": len(pass_s),
+        "pass_seconds": pass_s,
+    }
+
+
+def _timed(fn) -> float:
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
+
+
 def run_ingest_bench(
     spark: SparkSession,
     rows: int | None = None,
     work_dir: str = "/tmp/quacfka_spark_ingest",
-    deadline: float | None = None,
     shape: str = "small",
 ) -> dict:
     """Run the timed ingest: read bytes -> decode -> raw + norm writes.
 
-    ``rows=None`` auto-sizes: after warmup, a calibration pass over the
-    warm slice estimates this run's rows/s on THIS machine right now,
-    and the measured run is sized to ~45 s (capped at DEFAULT_ROWS).
-    ``deadline`` (time.monotonic()) bounds optional repeat passes.
-    ``shape`` picks the payload (SHAPES): "small" = the historical
-    ~38 B row, "wide" = the reference-parity ~1.27 KB message whose
-    mb_per_second compares apples-to-apples with the published
-    501 MB/s (README.md:154-167).
+    ``rows`` defaults to the shape's fixed row count; every call runs
+    PASSES timed passes. ``shape`` picks the payload (SHAPES): "small" =
+    the historical ~38 B row, "wide" = the reference-parity ~1.27 KB
+    message whose mb_per_second compares apples-to-apples with the
+    published 501 MB/s (README.md:154-167).
 
     Returns a report shaped like the reference's metrics JSON
     (/root/reference/metrics.go:259-282).
@@ -608,6 +392,7 @@ def run_ingest_bench(
     from quacfka_spark.plans.normalizer import NormalizerSpec
 
     sh = SHAPES[shape]
+    rows = sh.rows if rows is None else rows
     norm_spec = NormalizerSpec(
         fields=list(sh.norm_fields), aliases=list(sh.norm_aliases)
     )
@@ -625,69 +410,11 @@ def run_ingest_bench(
     # + codegen scaffolding) is shared across plans, so a few passes over
     # a small separate slice warm the fresh full-size plan too
     # (measured: 5x500k warm passes take the 4M decode 40s -> 7s).
-    # wide rows are ~33x the bytes of small rows: scale the calibration
-    # slice so its wall cost stays comparable
-    calib_rows = _CALIB_ROWS if shape == "small" else _CALIB_ROWS // 8
-    warm_rows = min(rows // 8, calib_rows) if rows else calib_rows
     warm_src = os.path.join(work_dir, "warm")
-    _gen_bytes(spark, warm_rows, warm_src, cores, encode, sh.payload)
+    _gen_bytes(spark, rows // 8, warm_src, cores, encode, sh.payload)
     warm = decode(spark.read.parquet(warm_src)).select("r.*")
     for _ in range(5):
         warm.write.format("noop").mode("overwrite").save()
-
-    calib_list: list[float] = []
-    rate: float | None = None
-    target_pass_s: float | None = None
-    grain = 100_000 if shape == "small" else 10_000
-    if rows is None:
-        # calibration: full raw+norm passes over the warm slice, best of
-        # 2 — the host VM shows intermittent multi-10s stalls (measured:
-        # an identical 0.6s job taking 77s), and a stalled single
-        # calibration would undersize the whole run
-        def calib_pass() -> float:
-            t0 = time.perf_counter()
-            warm.write.mode("overwrite").parquet(out_raw)
-            norm_spec.apply(
-                spark.read.parquet(out_raw)
-            ).write.mode("overwrite").parquet(out_norm)
-            return time.perf_counter() - t0
-
-        # a third sample when the two scatter >2x: a stalled calibration
-        # both undersizes the run (fixed costs then dominate the rate —
-        # BENCH_r10's 309k rows/s narrow-batch casualty) and inflates
-        # the expectation the stall detector compares passes against
-        calib_list = [calib_pass(), calib_pass()]
-        if max(calib_list) > 2.0 * min(calib_list):
-            calib_list.append(calib_pass())
-        rate = warm_rows / max(min(calib_list), 0.1)
-        # size so gen + pass1 + optional pass2 (~3 pass-equivalents) fit
-        # what's left of the budget
-        if shape == "wide":
-            # SHORT passes, many samples: the host shows multi-10s
-            # stalls at random (measured r8: the same 614 MB raw write
-            # taking 2.1 s and 38 s in one session), and any stall
-            # inside a pass corrupts that sample. The reference's
-            # 501 MB/s is likewise its best steady-state 30 s sample
-            # out of a 5-minute run — best-of-many short passes is the
-            # apples-to-apples estimator, and it is what makes the
-            # wide number reproducible in an arbitrary driver window
-            # (r7's single long pass caught 85 MB/s in a window where
-            # best-of-6 measured 246 MB/s).
-            if deadline is not None:
-                target_pass_s = min(
-                    12.0, max(5.0, (deadline - time.monotonic()) / 8)
-                )
-            else:
-                target_pass_s = 12.0
-        elif deadline is not None:
-            target_pass_s = min(45.0, max(15.0, (deadline - time.monotonic()) / 3))
-        else:
-            target_pass_s = 45.0
-        row_cap = WIDE_MAX_ROWS if shape == "wide" else DEFAULT_ROWS
-        rows = max(
-            calib_rows,
-            min(row_cap, int(rate * target_pass_s) // grain * grain),
-        )
 
     mb = _gen_bytes(spark, rows, src, cores, encode, sh.payload)
 
@@ -709,126 +436,37 @@ def run_ingest_bench(
         # duplicated, null columns when the list is empty.
         norm_spec.apply(raw_back).write.mode("overwrite").parquet(out_norm)
 
-    # Best-of-N with a deadline: this VM shows large run-to-run variance
-    # (noisy neighbors / JIT); the reference's number is likewise its
-    # best steady-state 30s sample, so best-of-N is the apples-to-apples
-    # capability measurement. Wide passes are short (see target_pass_s
-    # above) so up to 6 samples fit a phase slice; the retry estimate
-    # uses the BEST pass so far, capped — gating on a stalled pass's
-    # time would lock the stall in (the r6 streaming lesson).
-    # without a deadline (direct/test callers) cap at 2 — the 6-sample
-    # wide budget exists for the driver's deadline-bounded window only
-    max_passes = (6 if shape == "wide" else 2) if deadline is not None else 2
-    walls: list[float] = []
-    busys: list[float | None] = []
-    steals: list[float | None] = []
-    owns: list[float | None] = []
-
-    def add_pass() -> None:
-        w, b, s, o, _ = _timed(one_pass)
-        walls.append(w)
-        busys.append(b)
-        steals.append(s)
-        owns.append(o)
-
-    add_pass()
-    while len(walls) < max_passes and (
-        deadline is None
-        or time.monotonic() + min(min(walls) * 1.2, 60.0) < deadline
-    ):
-        add_pass()
-
-    resized = False
-    expected_pass_s: float | None = None
-    if rate is not None:
-        # Stalled-calibration guard (the r10 narrow-batch failure mode):
-        # when the measured passes run >2x FASTER than the calibrated
-        # rate, calibration caught a host stall and undersized the run —
-        # the published rate then measures parquet-commit fixed costs,
-        # not the pipeline (309k rows/s on a 500k-row floor vs the same
-        # window's 2.56M through the streaming block). Re-size to the
-        # measured rate and re-generate once, budget permitting.
-        measured_rate = rows / min(walls)
-        resize_cap = WIDE_MAX_ROWS if shape == "wide" else DEFAULT_ROWS
-        if (
-            deadline is not None
-            and measured_rate > 2.0 * rate
-            and rows < resize_cap
-        ):
-            new_rows = max(
-                rows,
-                min(
-                    resize_cap,
-                    int(measured_rate * target_pass_s) // grain * grain,
-                ),
-            )
-            est = new_rows / measured_rate
-            # gen ~ 1 pass-equivalent + 2 passes + slack
-            if new_rows > rows and time.monotonic() + est * 4 < deadline:
-                rate, rows = measured_rate, new_rows
-                mb = _gen_bytes(spark, rows, src, cores, encode, sh.payload)
-                walls, busys, steals, owns = [], [], [], []
-                resized = True
-                add_pass()
-                while len(walls) < 2 and (
-                    time.monotonic() + min(min(walls) * 1.2, 60.0) < deadline
-                ):
-                    add_pass()
-        expected_pass_s = rows / rate
-    # rerun-on-stall (r10 verdict #1): when even the best pass is >2x
-    # the rate-derived expectation the window stalled every sample —
-    # keep sampling up to a cap instead of publishing the stall
-    while should_rerun_stalled(
-        walls, expected_pass_s, max_passes + 4, deadline
-    ):
-        add_pass()
-    elapsed = min(walls)
-    passes = len(walls)
-
+    walls = [_timed(one_pass) for _ in range(PASSES)]
     raw_n = spark.read.parquet(out_raw).count()
     norm_n = spark.read.parquet(out_norm).count()
     shutil.rmtree(work_dir, ignore_errors=True)
-    total = raw_n + norm_n
     return {
         "shape": shape,
         "records_consumed": rows,
         "records_inserted": raw_n,
         "norm_records_inserted": norm_n,
         "normalizer_fields": len(sh.norm_fields),
-        "duration_seconds": round(elapsed, 3),
-        "records_per_second": round(raw_n / elapsed, 2),
-        "total_rows_per_second": round(total / elapsed, 2),
-        "mb_per_second": round(mb / elapsed, 2),
         "payload_mb": round(mb, 2),
-        "bytes_per_record": round(mb * 1024 * 1024 / rows, 1),
         "cores": cores,
-        "passes": passes,
-        **stall_evidence(walls, expected_pass_s, busys, steals, owns),
-        **(
-            {"calib_seconds": [round(c, 2) for c in calib_list]}
-            if calib_list
-            else {}
-        ),
-        **({"resized": True} if resized else {}),
+        **_pass_report(walls, rows, raw_n, norm_n, mb),
         "decode": fmt,
     }
 
 
 def run_streaming_ingest_bench(
     spark: SparkSession,
-    rows: int = DEFAULT_ROWS,
+    rows: int | None = None,
     work_dir: str = "/tmp/quacfka_spark_ingest_stream",
     epochs: int = 2,
-    deadline: float | None = None,
     shape: str = "small",
     file_grain: int = 1,
-    expect_rate: float | None = None,
 ) -> dict:
     """Same measurement through the actual StreamingPipeline orchestrator
     (foreachBatch, rotation epochs, post-publish, metrics) — the full
-    D13-D24 path, not just raw Spark jobs. ``epochs`` micro-batches
-    exercise the rotation loop like the reference's multi-file run
-    (9 files in the published benchmark, README.md:170).
+    D13-D24 path, not just raw Spark jobs. ``rows`` defaults to the
+    shape's fixed row count, the same work as the batch twin. ``epochs``
+    micro-batches exercise the rotation loop like the reference's
+    multi-file run (9 files in the published benchmark, README.md:170).
 
     Epoch sizing matters: the reference's rotation unit is ~30 s of
     ingest (tens of millions of rows per closed .db file); an epoch of a
@@ -848,19 +486,12 @@ def run_streaming_ingest_bench(
     idles 31 cores until the batch commits, and finer tasks shrink the
     straggler tail the way a 4x-cores shuffle-partition count does for
     joins. Grain 1 stays the default for the small-shape continuity
-    series (its ~2 s passes are commit-bound, not straggler-bound).
-
-    ``expect_rate`` (raw records/s) is the sibling BATCH block's
-    measured best rate: the orchestrator passes it so this block has a
-    rate-derived pass expectation for the stall detector (streaming has
-    no calibration of its own). Expected pass wall = rows/expect_rate +
-    2 s fixed setup; a best pass >2x that triggers extra samples, and
-    the report carries per-pass wall/busy/steal evidence either way
-    (r10 verdict #1 — the 35.0 MB/s wide-streaming casualty)."""
+    series (its ~2 s passes are commit-bound, not straggler-bound)."""
     from quacfka_spark.plans.normalizer import NormalizerSpec
     from quacfka_spark.streaming import PipelineConfig, StreamingPipeline
 
     sh = SHAPES[shape]
+    rows = sh.rows if rows is None else rows
     cores = spark.sparkContext.defaultParallelism
     src = os.path.join(work_dir, "src")
     out = os.path.join(work_dir, "out")
@@ -870,8 +501,9 @@ def run_streaming_ingest_bench(
     mb = _gen_bytes(
         spark, rows, src, cores * epochs * grain, encode, sh.payload
     )
+    reports: list[dict] = []
 
-    def one_pass(i: int) -> dict:
+    def one_pass() -> None:
         source = (
             spark.readStream.schema("value binary")
             .option("maxFilesPerTrigger", str(cores * grain))
@@ -881,7 +513,9 @@ def run_streaming_ingest_bench(
             spark,
             source,
             PipelineConfig(
-                output_dir=f"{out}_{i}", dest_table="messages", available_now=True
+                output_dir=f"{out}_{len(reports)}",
+                dest_table="messages",
+                available_now=True,
             ),
             decode=decode,
             normalizer=NormalizerSpec(
@@ -891,61 +525,11 @@ def run_streaming_ingest_bench(
         )
         q = pipe.start()
         q.awaitTermination()
-        return pipe.metrics.report()
+        reports.append(pipe.metrics.report())
 
-    # best-of-N when the deadline allows (see run_ingest_bench). The
-    # retry estimate is CAPPED: when pass 1 hits a multi-10s host stall
-    # (measured 6.8 s fresh vs 68 s in an aged window for the same
-    # work), gating the retry on elapsed*1.2 would lock the stalled
-    # number in — exactly the pass that most needs the retry. Both
-    # shapes get up to 4 samples (passes are seconds-long; the byte-
-    # parity wide claim and the small-row continuity series both
-    # deserve one stall-free pass in an arbitrary driver window).
-    # Without a deadline (direct/test callers) the while-gate would be
-    # vacuously true and always run the maximum — cap those at 2 so a
-    # plain call pays best-of-2, not 4x wall + 4 output dirs (advisor
-    # r8); the bench driver always passes its phase deadline.
-    max_passes = 4 if deadline is not None else 2
-    walls: list[float] = []
-    busys: list[float | None] = []
-    steals: list[float | None] = []
-    owns: list[float | None] = []
-    best: tuple[float, dict] | None = None
-
-    def add_pass() -> None:
-        nonlocal best
-        w, b, s, o, r = _timed(lambda: one_pass(len(walls)))
-        walls.append(w)
-        busys.append(b)
-        steals.append(s)
-        owns.append(o)
-        if best is None or w < best[0]:
-            best = (w, r)
-
-    add_pass()
-    while len(walls) < max_passes and (
-        deadline is None
-        or time.monotonic() + min(min(walls) * 1.2, 60.0) < deadline
-    ):
-        add_pass()
-    # rate-derived expectation from the sibling batch block + a fixed
-    # term that SCALES with micro-batch count (r11 advisor): ~2 s of
-    # stream start/checkpoint init plus ~2 s commit barrier per epoch —
-    # a flat 2 s marks a healthy many-epoch run "stalled" forever and
-    # burns rerun passes that can never converge. Rerun-on-stall with
-    # the same policy as run_ingest_bench.
-    expected_pass_s = (
-        rows / expect_rate + 2.0 + 2.0 * epochs
-        if expect_rate and expect_rate > 0
-        else None
-    )
-    while should_rerun_stalled(
-        walls, expected_pass_s, max_passes + 4, deadline
-    ):
-        add_pass()
-    elapsed, rep = best
+    walls = [_timed(one_pass) for _ in range(PASSES)]
     shutil.rmtree(work_dir, ignore_errors=True)
-    total = rep["records_inserted"] + rep["norm_records_inserted"]
+    rep = reports[-1]
     return {
         "shape": shape,
         "records_consumed": rep["records_consumed"],
@@ -953,21 +537,21 @@ def run_streaming_ingest_bench(
         "norm_records_inserted": rep["norm_records_inserted"],
         "normalizer_fields": len(sh.norm_fields),
         "batches": rep["batches"],
-        "duration_seconds": round(elapsed, 3),
-        "records_per_second": round(rep["records_inserted"] / elapsed, 2),
-        "total_rows_per_second": round(total / elapsed, 2),
-        "mb_per_second": round(mb / elapsed, 2),
-        "bytes_per_record": round(mb * 1024 * 1024 / max(rep["records_consumed"], 1), 1),
         "cores": cores,
-        "passes": len(walls),
-        **stall_evidence(walls, expected_pass_s, busys, steals, owns),
+        **_pass_report(
+            walls,
+            rep["records_consumed"],
+            rep["records_inserted"],
+            rep["norm_records_inserted"],
+            mb,
+        ),
         "decode": fmt,
     }
 
 
 def run_dedup_streaming_bench(
     spark: SparkSession,
-    rows: int = DEFAULT_ROWS,
+    rows: int = 2_000_000,
     work_dir: str = "/tmp/quacfka_spark_ingest_dedup",
 ) -> dict:
     """Opt-in: the measured cost of cross-epoch ingest dedup
@@ -1250,9 +834,9 @@ def run_sustained_streaming_bench(
         )
     steady = [p["rows_per_second"] for p in per_epoch[1:] if p["rows_per_second"]]
     med = sorted(steady)[len(steady) // 2] if steady else 0.0
-    # strict verdict + outlier count: the host VM shows documented
-    # multi-second stalls (see run_ingest_bench), so a single stalled
-    # epoch is reported as an outlier rather than silently averaged away
+    # strict verdict + outlier count: the host VM shows multi-second
+    # stalls, so a single stalled epoch is reported as an outlier
+    # rather than silently averaged away
     within = [abs(r - med) <= 0.20 * med for r in steady]
     flat = bool(steady) and all(within)
     n_outliers = len(within) - sum(within)
@@ -1288,7 +872,8 @@ def run_sustained_streaming_bench(
 
 
 def main() -> None:
-    """CLI: print one JSON line with both ingest reports. bench.py runs
+    """CLI: print the four ingest blocks as one JSON line, re-emitted
+    after each block. bench.py runs
     this in a SUBPROCESS so the ingest pipeline owns a fresh JVM — query
     jobs and ingest jobs measurably degrade each other's session (JIT/
     GC aging), and the reference's run likewise owned its process.
@@ -1324,101 +909,42 @@ def main() -> None:
         print()
         spark.stop()
         return
-    deadline = time.monotonic() + BUDGET_S
     out: dict = {}
 
-    def emit() -> None:
-        # progressive emit: if the host stalls during a later phase and
-        # the parent kills this subprocess, the finished numbers still
-        # reach bench.py (it reads the LAST complete stdout line)
+    def block(key: str, fn) -> None:
+        # one failed block must not lose the others; emit after each
+        # block so that if the parent kills this subprocess on its
+        # timeout, the finished numbers still reach bench.py (it reads
+        # the LAST complete stdout line)
+        try:
+            out[key] = fn()
+        except Exception as e:  # pragma: no cover
+            out[key] = {"error": str(e)[:200]}
         json.dump(out, sys.stdout)
         sys.stdout.write("\n")
         sys.stdout.flush()
 
-    # Four phases inside one budget: WIDE batch + WIDE orchestrator
-    # (byte parity with the reference's 501 MB/s run) first, then the
-    # small shape twice (rows/s continuity with BENCH_r01..r07). Each
-    # phase auto-sizes to its slice via calibration, and a phase is
-    # skipped (recorded, not silent) when its slice has been eaten by
-    # an earlier stall.
-    def phase(key: str, frac_end: float, min_s: float, fn) -> None:
-        phase_end = min(deadline, time.monotonic() + BUDGET_S * frac_end)
-        if deadline - time.monotonic() < min_s:
-            out[key] = {
-                "skipped": f"budget exhausted ({deadline - time.monotonic():.0f}s left)"
-            }
-        else:
-            try:
-                out[key] = fn(phase_end)
-            except Exception as e:  # pragma: no cover
-                out[key] = {"error": str(e)[:200]}
-        emit()
-
-    # WIDE phases run FIRST (r7 verdict #1): they carry the byte-parity
-    # headline claim (README 180-302 MB/s batch / 107-291 streaming),
-    # and the late phases of a long subprocess are the ones most
-    # exposed to JVM aging, budget erosion from earlier stalls, and
-    # host stalls (measured 68 s for work a fresh session does in
-    # 6.8 s). The small-shape phases keep the rows/s continuity series
-    # with BENCH_r01..r07 and are robust (~2 s passes).
-    phase(
-        "ingest_wide", 0.28, 60,
-        lambda end: run_ingest_bench(
-            spark,
-            deadline=end,
-            shape="wide",
-            work_dir="/tmp/quacfka_spark_ingest_wide",
+    # WIDE blocks first: they carry the byte-parity comparison with the
+    # reference's 501 MB/s run. The small shape keeps the rows/s
+    # continuity series with BENCH_r01..r07. Each streaming block runs
+    # its batch twin's rows.
+    block(
+        "ingest_wide",
+        lambda: run_ingest_bench(
+            spark, shape="wide", work_dir="/tmp/quacfka_spark_ingest_wide"
         ),
     )
-    wide_rows = out["ingest_wide"].get("records_consumed", _CALIB_ROWS // 2)
-    # Pass-length fix (r9 verdict #3, INGEST_WIDE_STREAM_GRID.json):
-    # each orchestrator pass pays ~1.5-2 s of fixed setup (streaming
-    # query start, checkpoint init, micro-batch commits, stop) that the
-    # old sizing — the batch phase's cold-calibrated row count, ~3.5 s
-    # passes — never amortized: the streaming block read 190 MB/s in
-    # windows where the same pipeline's asymptotic rate was 300+. Size
-    # the streaming pass to ~8 s of payload at the batch phase's
-    # MEASURED best rate instead (the best pass is the right estimator:
-    # a stalled calibration must not lock in short passes), floored at
-    # the old sizing and capped at DEFAULT_ROWS. Longer passes are also
-    # the faithful shape — the reference's rotation unit is ~30 s of
-    # ingest (README.md:170), not 3 s.
-    wide_rate = out["ingest_wide"].get("records_per_second", 0)
-    stream_wide_rows = max(
-        _CALIB_ROWS // 8,
-        wide_rows,
-        min(WIDE_MAX_ROWS, int(wide_rate * 8) // 10_000 * 10_000),
-    )
-    phase(
-        "ingest_streaming_wide", 0.24, 60,
-        lambda end: run_streaming_ingest_bench(
+    block(
+        "ingest_streaming_wide",
+        lambda: run_streaming_ingest_bench(
             spark,
-            rows=stream_wide_rows,
-            deadline=end,
             shape="wide",
             file_grain=4,
             work_dir="/tmp/quacfka_spark_ingest_stream_wide",
-            # the batch block's measured rate is this block's stall
-            # expectation (streaming's micro-batch setup adds ~2 s,
-            # folded into expected_pass_s inside)
-            expect_rate=wide_rate or None,
         ),
     )
-    phase(
-        "ingest", 0.26, 45,
-        lambda end: run_ingest_bench(spark, deadline=end),
-    )
-    batch_rows = out["ingest"].get("records_consumed", DEFAULT_ROWS)
-    batch_rate = out["ingest"].get("records_per_second", 0)
-    phase(
-        "ingest_streaming", 0.22, 60,
-        lambda end: run_streaming_ingest_bench(
-            spark,
-            rows=max(_CALIB_ROWS, batch_rows),
-            deadline=end,
-            expect_rate=batch_rate or None,
-        ),
-    )
+    block("ingest", lambda: run_ingest_bench(spark))
+    block("ingest_streaming", lambda: run_streaming_ingest_bench(spark))
     spark.stop()
 
 

@@ -151,10 +151,15 @@ def test_ingest_bench_invariants(spark, tmp_path):
     assert r["norm_records_inserted"] == n // 3 * 4
     assert r["duration_seconds"] > 0
     assert r["mb_per_second"] > 0
-    # best-of-N transparency (r8): per-pass walls ride in the report
-    # and the headline duration is their min (2dp vs 3dp rounding)
-    assert abs(r["duration_seconds"] - min(r["pass_seconds"])) < 0.006
-    assert len(r["pass_seconds"]) == r["passes"]
+    _assert_fixed_passes(r)
+
+
+def _assert_fixed_passes(r: dict) -> None:
+    """Fixed work: three timed passes, the headline rates from the best
+    one, the median pass's total rate alongside."""
+    assert r["passes"] == 3 == len(r["pass_seconds"])
+    assert r["duration_seconds"] == min(r["pass_seconds"])
+    assert 0 < r["median_total_rows_per_second"] <= r["total_rows_per_second"]
 
 
 def test_streaming_bench_file_grain_output_invariant(spark, tmp_path):
@@ -176,6 +181,7 @@ def test_streaming_bench_file_grain_output_invariant(spark, tmp_path):
     assert r["records_inserted"] == n
     assert r["norm_records_inserted"] == n // 3 * 4
     assert r["batches"] == 2  # grain multiplies files AND quota
+    _assert_fixed_passes(r)
 
 
 def test_sqlrunner_exec_mode_with_export(spark, tmp_path, input_dir):

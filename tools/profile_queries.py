@@ -6,11 +6,12 @@ same session + noop-sink methodology as bench.py:
 
 - ``build_s``  — wall time of the Python plan construction call
 - ``exec_s``   — wall time of the noop-sink execution (per pass)
-- ``jobs`` / ``stages`` / ``tasks`` — Spark scheduler counts for the
-  execution, via the status tracker on a per-query job group (a query
-  that runs N collect-style chooser jobs before its main action shows
-  up here as N+1 jobs — driver-synchronized round trips the bench
-  pays serially)
+- ``jobs`` / ``task_s`` / ``gc_s`` / ``shuffle_mb`` / ``spill_mb`` —
+  the last (warm) pass's Spark jobs and their task metrics, read from
+  Spark's own event log after the session stops and folded per job
+  group by perfbench/measure.fold_event_log (a query that runs N
+  collect-style chooser jobs before its main action shows up here as
+  N+1 jobs — driver-synchronized round trips the bench pays serially)
 
 Emits JSON to --out (default /tmp/profile_queries.json) sorted by best
 exec_s descending. Optionally captures .explain("formatted") for each
@@ -27,7 +28,9 @@ import argparse
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -47,8 +50,18 @@ def main() -> None:
     from quacfka_spark.session import get_spark
 
     import bench as bench_mod
+    from perfbench.measure import fold_event_log
 
-    spark = get_spark("quacfka-spark-profile")
+    event_dir = tempfile.mkdtemp(prefix="profile-eventlog-")
+    spark = get_spark(
+        "quacfka-spark-profile",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": event_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
     sc = spark.sparkContext
     queries = get_queries()
     names = [n for n in bench_mod.HEADLINE if n in queries]
@@ -63,9 +76,7 @@ def main() -> None:
     prof: dict[str, dict] = {}
     for name in names:
         fn = queries[name]
-        rec = prof.setdefault(
-            name, {"build_s": [], "exec_s": [], "jobs": 0, "stages": 0, "tasks": 0}
-        )
+        rec = prof.setdefault(name, {"build_s": [], "exec_s": []})
         for p in range(max(1, args.passes)):
             group = f"prof-{name}-{p}"
             sc.setJobGroup(group, name)
@@ -84,23 +95,6 @@ def main() -> None:
             t2 = time.perf_counter()
             rec["build_s"].append(round(t1 - t0, 4))
             rec["exec_s"].append(round(t2 - t1, 4))
-            if p == args.passes - 1:
-                # count scheduler work for the LAST pass only (warm)
-                tr = sc.statusTracker()
-                job_ids = tr.getJobIdsForGroup(group) or []
-                n_stages = n_tasks = 0
-                for jid in job_ids:
-                    ji = tr.getJobInfo(jid)
-                    if ji is None:
-                        continue
-                    for sid in ji.stageIds:
-                        si = tr.getStageInfo(sid)
-                        if si is not None:
-                            n_stages += 1
-                            n_tasks += si.numTasks
-                rec["jobs"] = len(job_ids)
-                rec["stages"] = n_stages
-                rec["tasks"] = n_tasks
             sc.setJobGroup("", "")
             print(
                 f"# {name} pass{p}: build {t1 - t0:.3f}s exec {t2 - t1:.3f}s",
@@ -126,7 +120,18 @@ def main() -> None:
             ) as fh:
                 fh.write(plan)
 
-    for rec in prof.values():
+    app_id = sc.applicationId
+    spark.stop()
+    with open(os.path.join(event_dir, app_id)) as fh:
+        groups = fold_event_log(fh).by("group")
+    shutil.rmtree(event_dir, ignore_errors=True)
+    last = max(1, args.passes) - 1
+    for name, rec in prof.items():
+        # scheduler work of the LAST pass only (warm)
+        jobs = groups.get(f"prof-{name}-{last}", [])
+        rec["jobs"] = len(jobs)
+        for k in ("task_s", "gc_s", "shuffle_mb", "spill_mb"):
+            rec[k] = round(sum(getattr(j, k) for j in jobs), 3)
         if rec["exec_s"]:
             rec["best_exec"] = min(rec["exec_s"])
             rec["best_build"] = min(rec["build_s"])
@@ -146,7 +151,6 @@ def main() -> None:
     with open(args.out, "w") as fh:
         json.dump(summary, fh, indent=1)
     print(json.dumps({k: summary[k] for k in ("total_best_exec", "total_best_build")}))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -139,7 +139,6 @@ def main() -> None:
     ap.add_argument("--out", default="STREAM_FIXED_COST.json")
     args = ap.parse_args()
 
-    from quacfka_spark.bench_ingest import _timed, window_class
     from quacfka_spark.session import get_spark
 
     spark = get_spark("stream-fixed-cost")
@@ -149,17 +148,7 @@ def main() -> None:
         ("small", args.rows_small),
         ("large", args.rows_large),
     ):
-        wall, busy, steal, own, r = _timed(
-            lambda rows=rows: run_one(
-                spark, rows, args.epochs, args.work_dir
-            )
-        )
-        if busy is not None and own is not None:
-            r["busy"], r["own"] = round(busy, 2), round(own, 2)
-            r["other"] = round(max(busy - own, 0.0), 2)
-            wc = window_class([busy], [steal], [own])
-            if wc:
-                r["window"] = wc
+        r = run_one(spark, rows, args.epochs, args.work_dir)
         rep["runs"][name] = r
         print(f"# {name}: {json.dumps(r)}", file=sys.stderr)
 
