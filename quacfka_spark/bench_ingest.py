@@ -45,7 +45,7 @@ import shutil
 import statistics
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataclasses import dataclass
@@ -366,6 +366,20 @@ def _pass_report(
     }
 
 
+def _warm_up(warm: DataFrame, work_dir: str) -> None:
+    """JIT the hot path before anything is timed: five ``noop`` passes
+    warm the decode, then two parquet writes warm the WRITE path
+    (encoder + committer), which noop never touches — without them the
+    first timed pass or epoch still rides the write-side ramp (wide
+    batch pass 1 ran 1.2-1.7x the later passes)."""
+    for _ in range(5):
+        warm.write.format("noop").mode("overwrite").save()
+    warm_dir = os.path.join(work_dir, "warm_write")
+    for _ in range(2):
+        warm.write.mode("overwrite").parquet(warm_dir)
+    shutil.rmtree(warm_dir, ignore_errors=True)
+
+
 def _timed(fn) -> float:
     t0 = time.perf_counter()
     fn()
@@ -412,9 +426,7 @@ def run_ingest_bench(
     # (measured: 5x500k warm passes take the 4M decode 40s -> 7s).
     warm_src = os.path.join(work_dir, "warm")
     _gen_bytes(spark, rows // 8, warm_src, cores, encode, sh.payload)
-    warm = decode(spark.read.parquet(warm_src)).select("r.*")
-    for _ in range(5):
-        warm.write.format("noop").mode("overwrite").save()
+    _warm_up(decode(spark.read.parquet(warm_src)).select("r.*"), work_dir)
 
     mb = _gen_bytes(spark, rows, src, cores, encode, sh.payload)
 
@@ -775,16 +787,7 @@ def run_sustained_streaming_bench(
     # needs ~10^5-10^6 iterations per thread), which the flatness
     # verdict then misread as instability.
     warm_rows = max(200_000, rows_per_epoch // 4)
-    warm = decode(spark.read.parquet(src).limit(warm_rows)).select("r.*")
-    for _ in range(5):
-        warm.write.format("noop").mode("overwrite").save()
-    # ... and the parquet WRITE path (encoder + committer JIT), which
-    # noop never touches — without this, epoch 1 still rides the tail
-    # of the write-side ramp and trips the 20% band
-    warm_dir = os.path.join(work_dir, "warm_write")
-    for _ in range(2):
-        warm.write.mode("overwrite").parquet(warm_dir)
-    shutil.rmtree(warm_dir, ignore_errors=True)
+    _warm_up(decode(spark.read.parquet(src).limit(warm_rows)).select("r.*"), work_dir)
 
     source = (
         spark.readStream.schema("value binary")

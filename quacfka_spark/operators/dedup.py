@@ -1555,7 +1555,7 @@ def d09_chunk_freq_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Multi-probe: each vector belongs to its top-_D10_PROBE trained cells
 # for PAIRING (multi-probe LSH's recall trick applied to the SemDeDup
 # blocking); the reported cell is the primary (nearest) one. The
-# MEASURED recall/cost curve (tools/d10_curve.py, D10_RECALL_CURVE.json,
+# MEASURED recall/cost curve (D10_RECALL_CURVE.json,
 # round-7 verdict ask #5) across sf0.001/0.01/0.1:
 #   probe=1: recall 0.32/0.32/0.43  (work proxy sum(cell^2) = 1x)
 #   probe=2: recall 0.65/0.69/0.78  (~4x work)
@@ -1639,7 +1639,7 @@ def d10_semdedup(
 
     ``probe`` widens the multi-probe membership (the recall/cost
     knob): each vector pairs inside its top-``probe`` cells. Measured
-    curve on the fixtures (tools/d10_curve.py, D10_RECALL_CURVE.json):
+    curve on the fixtures (D10_RECALL_CURVE.json):
     probe=1 is the cheap low-recall floor (0.32-0.43), probe=2 buys
     most of the cross-cell recall back (0.65-0.78), probe=3 (the
     registered operating point, certified by d10x at >= 0.80) reaches

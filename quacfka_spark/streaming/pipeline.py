@@ -6,7 +6,10 @@ Reference mapping (SURVEY.md §2a):
 - D13 columnar sink: ``foreachBatch`` writing raw/norm/custom parquet —
   replaces the DuckDB connection pool (duck.go:299-546). ``append`` save
   mode auto-creates table dirs like ``IngestCreateAppend``.
-- D14 ``write_raw=False`` = ``WithoutDuckIngestRaw`` (quacfka.go:122-126).
+- D14 ``write_raw=False`` = ``WithoutDuckIngestRaw`` (quacfka.go:122-126):
+  the epoch still lands its batch once, in an unpublished
+  ``_staging/epoch=N`` dir that the derived sinks read back and the
+  epoch deletes at its end, so both modes share one data path.
 - D15/D16 rotation: each micro-batch epoch is one rotation unit
   (``trigger_seconds`` ~ rotation duration, quacfka.go:94-104);
   ``rotate_mb`` enforces the MB threshold with measured bytes-per-record
@@ -44,16 +47,17 @@ from __future__ import annotations
 import re
 import json
 import os
+import shutil
 import threading
 import time
-from collections import OrderedDict, deque
+from collections import OrderedDict
 from collections.abc import Callable
 from concurrent.futures import Future
 from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quacfka_spark.plans.custom import TransformRegistry
@@ -201,6 +205,18 @@ class PipelineMetrics:
             return dict(self._recent)
 
 
+def _escaped_literals(spark: SparkSession | None) -> bool:
+    """The session's ``spark.sql.parser.escapedStringLiterals`` (False
+    with no session). Spark's default parser treats backslash as an
+    escape inside '...'/"..." literals; a Hive-compat session (true)
+    treats it as a literal character, so 'x\\' is a TERMINATED string
+    there. Scanning under the wrong mode swallows the closing quote and
+    runs verb/depth detection over literal content."""
+    if spark is None:
+        return False
+    return spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() == "true"
+
+
 @dataclass
 class SQLRunner:
     """D18: ordered SQL statements run against each completed epoch's
@@ -217,14 +233,6 @@ class SQLRunner:
     exec: bool = True
     fn: Callable[[SparkSession, int], None] | None = None
     delete_on_done: bool = False
-    # Spark's default parser treats backslash as an escape inside
-    # '...'/"..." literals; sessions running with
-    # spark.sql.parser.escapedStringLiterals=true (Hive compat) treat it
-    # as a literal character, so 'x\' is a TERMINATED string there. Set
-    # this to True to match such a session — otherwise the scanner would
-    # swallow the closing quote and run verb/depth detection over
-    # literal content (mis-accepting or mis-rejecting statements).
-    escaped_string_literals: bool = False
 
     # Statement prefixes that run for effect (side-effecting DDL/DML) —
     # anything else in exec mode is a result-bearing query whose rows
@@ -247,31 +255,19 @@ class SQLRunner:
     )
 
     def __post_init__(self) -> None:
+        esc = _escaped_literals(SparkSession.getActiveSession())
         for q in self.queries:
-            self._check_effect_only(q)
-        # Parser modes whose scan already accepted every statement. The
-        # constructor-declared `escaped_string_literals` stays immutable;
-        # run() re-validates a DIFFERING live-session mode with a local
-        # flag and records success here, so alternating sessions don't
-        # re-scan the list every epoch and the accept/reject state never
-        # depends on call history.
-        self._validated_modes = {self.escaped_string_literals}
+            self._check_effect_only(q, esc)
 
-    def _top_level_keyword(
-        self, q: str, escaped_string_literals: bool | None = None
-    ) -> str | None:
+    def _top_level_keyword(self, q: str, esc: bool) -> str | None:
         """The statement's first DEPTH-0 keyword, skipping string
         literals, -- and /* */ comments, and parenthesized bodies: for a
         plain statement that is its first word; for a WITH statement it
         is the keyword after the CTE definitions (so "WITH c AS
         (SELECT ...) SELECT" resolves to select, and a 'delete' inside a
         string literal or a CTE body can never masquerade as the
-        statement's verb)."""
-        esc = (
-            self.escaped_string_literals
-            if escaped_string_literals is None
-            else escaped_string_literals
-        )
+        statement's verb). ``esc`` is the session's parser mode (see
+        :func:`_escaped_literals`)."""
         depth = 0
         i, n = 0, len(q)
         words: list[str] = []
@@ -323,12 +319,10 @@ class SQLRunner:
                 return w
         return None
 
-    def _check_effect_only(
-        self, q: str, escaped_string_literals: bool | None = None
-    ) -> None:
+    def _check_effect_only(self, q: str, esc: bool) -> None:
         if not self.exec:
             return
-        kw = self._top_level_keyword(q, escaped_string_literals)
+        kw = self._top_level_keyword(q, esc)
         if kw not in self._EFFECT_PREFIXES:
             raise ValueError(
                 "SQLRunner(exec=True) statements run for effect only; "
@@ -338,40 +332,51 @@ class SQLRunner:
             )
 
     def add_queries(self, queries: list[str]) -> None:
+        esc = _escaped_literals(SparkSession.getActiveSession())
         for q in queries:
-            self._check_effect_only(q)
+            self._check_effect_only(q, esc)
         self.queries.extend(queries)
-        # new statements were scanned only under the constructor mode;
-        # any other mode must re-prove itself against the full list
-        self._validated_modes = {self.escaped_string_literals}
 
     def run(self, spark: SparkSession, epoch_id: int) -> None:
         if self.exec:
-            # The init-time guard scanned with the constructor's quoting
-            # mode; if the LIVE session's parser mode disagrees (Hive
-            # compat flips backslash semantics), re-validate with the
-            # real mode before executing — a statement mis-classified
-            # under the wrong mode is exactly the driver-materialization
-            # trap the guard exists to block.
-            esc = (
-                spark.conf.get(
-                    "spark.sql.parser.escapedStringLiterals", "false"
-                ).lower()
-                == "true"
-            )
-            if esc not in self._validated_modes:
-                # scan with a LOCAL mode flag — the constructor-declared
-                # mode stays immutable, so the guard's accept/reject
-                # state never depends on call history; record success
-                # only after every statement passed, so a failed scan on
-                # a retried epoch re-rejects rather than being skipped
-                for q in self.queries:
-                    self._check_effect_only(q, escaped_string_literals=esc)
-                self._validated_modes.add(esc)
+            # re-scan under the LIVE session's parser mode every epoch (a
+            # few us per statement): a statement mis-classified under
+            # another mode is exactly the driver-materialization trap the
+            # guard exists to block
+            esc = _escaped_literals(spark)
+            for q in self.queries:
+                self._check_effect_only(q, esc)
             for q in self.queries:
                 spark.sql(q).collect()
         elif self.fn is not None:
             self.fn(spark, epoch_id)
+
+
+def _hash128(key: F.Column) -> F.Column:
+    """Two seed-split xxhash64s of ``key`` as a struct<h1, h2> — the
+    repo's production hash family (d03p): native, type-aware, null-safe,
+    ~3x cheaper than md5(to_json(struct(...))) per row (measured in the
+    --dedup ingest bench). 128 bits keeps the birthday-collision
+    expectation < 3e-18 per pair — at 10^12 rows the chance of ONE
+    wrongly-dropped row is ~3e-8."""
+    return F.struct(
+        F.xxhash64(key).alias("h1"),
+        F.xxhash64(F.lit(0x9E3779B9), key).alias("h2"),
+    )
+
+
+def _epoch_dirs(root: str) -> list[tuple[int, str]]:
+    """(N, path) of every ``epoch=N`` dir under ``root``, ascending."""
+    if not os.path.isdir(root):
+        return []
+    out = []
+    for name in os.listdir(root):
+        if name.startswith("epoch="):
+            try:
+                out.append((int(name[len("epoch="):]), os.path.join(root, name)))
+            except ValueError:
+                continue
+    return sorted(out)
 
 
 class StreamingPipeline:
@@ -430,18 +435,6 @@ class StreamingPipeline:
         self._ledger_root = os.path.join(config.output_dir, "_dedup_ledger")
         self._neardup_root = os.path.join(config.output_dir, "_neardup_ledger")
         self.query = None
-        # Per-epoch phase trace (r12 verdict #4): monotonic stamps +
-        # in-batch phase splits, appended by _process_batch. Together
-        # with the engine's own StreamingQueryProgress durationMs
-        # (walCommit/commitOffsets/latestOffset/addBatch) this
-        # decomposes the per-micro-batch fixed cost: the gap between
-        # epoch N's exit and N+1's enter is engine-side (offset WAL,
-        # source planning, commit log); the in-batch split shows where
-        # addBatch's own time goes; ledger_wait_s is how long the batch
-        # thread blocked on the concurrent ledger write. Bounded to the
-        # same replay window as PipelineMetrics, so a long-lived stream
-        # keeps O(1) trace state.
-        self.epoch_trace: deque[dict] = deque(maxlen=self.metrics._recent_max)
 
     # -- epoch processing (D13/D17/D18/D20/D24) ----------------------------
     def _epoch_dir(self, table: str, epoch_id: int) -> str:
@@ -456,20 +449,11 @@ class StreamingPipeline:
 
     @cached_property
     def _digest(self) -> "F.Column":
-        # 128-bit key as two seed-split xxhash64s — the repo's production
-        # hash family (d03p): native, type-aware, null-safe, ~3x cheaper
-        # than md5(to_json(struct(...))) per row (measured in the
-        # --dedup ingest bench) and the ledger stores 16 bytes of longs
-        # instead of a 32-char hex string. 128 bits keeps the
-        # birthday-collision expectation < 3e-18 per pair — at 10^12
-        # rows the chance of ONE wrongly-dropped row is ~3e-8. Built once
-        # per pipeline: each Column call is a py4j round trip, and the
-        # expression is the same every epoch.
-        keys = [F.struct(*self.config.dedup_keys)]
-        return F.struct(
-            F.xxhash64(*keys).alias("h1"),
-            F.xxhash64(F.lit(0x9E3779B9), *keys).alias("h2"),
-        ).alias(self._DEDUP_COL)
+        # 128-bit key (see _hash128) over the dedup keys; the ledger
+        # stores 16 bytes of longs instead of a 32-char hex string. Built
+        # once per pipeline: each Column call is a py4j round trip, and
+        # the expression is the same every epoch.
+        return _hash128(F.struct(*self.config.dedup_keys)).alias(self._DEDUP_COL)
 
     def _ledger_paths(self, epoch_id: int, root: str | None = None) -> list[str]:
         """Ledger dirs for epochs STRICTLY earlier than ``epoch_id`` —
@@ -477,28 +461,15 @@ class StreamingPipeline:
         deduplicate against exactly the state its first attempt saw.
         Shared by the exact-digest ledger (default root) and the
         near-dup band ledger; both obey the same horizon."""
-        if root is None:
-            root = self._ledger_root
-        if not os.path.isdir(root):
-            return []
-        epochs = []
-        for name in os.listdir(root):
-            if not name.startswith("epoch="):
-                continue
-            try:
-                e = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if e < epoch_id:
-                epochs.append(e)
-        epochs.sort()
         horizon = self.config.dedup_ledger_epochs
-        if horizon is not None:
-            # the horizon is relative to the CURRENT epoch, not to how
-            # many ledger dirs exist, so a replayed epoch N sees the
-            # same window its first attempt saw (D19 idempotence)
-            epochs = [e for e in epochs if e >= epoch_id - horizon]
-        return [os.path.join(root, f"epoch={e}") for e in epochs]
+        # the horizon is relative to the CURRENT epoch, not to how many
+        # ledger dirs exist, so a replayed epoch N sees the same window
+        # its first attempt saw (D19 idempotence)
+        return [
+            path
+            for e, path in _epoch_dirs(root or self._ledger_root)
+            if e < epoch_id and (horizon is None or e >= epoch_id - horizon)
+        ]
 
     def _dedup_against_history(self, df: DataFrame, epoch_id: int) -> DataFrame:
         """Drop rows already inserted by any earlier epoch (plus
@@ -541,21 +512,9 @@ class StreamingPipeline:
         horizon = self.config.dedup_ledger_epochs
         if horizon is None:
             return
-        import shutil
-
-        cutoff = epoch_id - horizon
-        if os.path.isdir(root):
-            for name in os.listdir(root):
-                if not name.startswith("epoch="):
-                    continue
-                try:
-                    e = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if e < cutoff:
-                    shutil.rmtree(
-                        os.path.join(root, name), ignore_errors=True
-                    )
+        for e, path in _epoch_dirs(root):
+            if e < epoch_id - horizon:
+                shutil.rmtree(path, ignore_errors=True)
 
     # -- cross-epoch NEAR-dup gate (config.neardup_col) --------------------
     _ND_N = 12  # minhashes; banded 3-wide -> 4 band keys (the d03 shape)
@@ -612,15 +571,10 @@ class StreamingPipeline:
         if not prior:
             return df
         hist = self.spark.read.schema(self._ND_LEDGER_SCHEMA).parquet(*prior).distinct()
-        # Row id is the same two-seed 128-bit family as _digest: a lone
-        # 64-bit xxhash64 colliding between a flagged near-dup and an
-        # unrelated row in the batch would make the left_anti drop the
-        # innocent row too. 128 bits puts that below 3e-18 per pair.
-        allcols = F.struct(*[F.col(c) for c in df.columns])
-        rid = F.struct(
-            F.xxhash64(allcols).alias("h1"),
-            F.xxhash64(F.lit(0x9E3779B9), allcols).alias("h2"),
-        )
+        # Row id is 128-bit like _digest: a lone 64-bit xxhash64
+        # colliding between a flagged near-dup and an unrelated row in
+        # the batch would make the left_anti drop the innocent row too.
+        rid = _hash128(F.struct(*[F.col(c) for c in df.columns]))
         base = df.withColumn("__nd_rid", rid)
         narrow = base.select(
             "__nd_rid", F.col(self.config.neardup_col).alias("__nd_txt")
@@ -683,8 +637,6 @@ class StreamingPipeline:
         # (the reference's inline atomic counters, metrics.go:15-60). A
         # separate df.count() would re-run the whole upstream stage —
         # decode included — once per sink.
-        from pyspark.sql import Observation
-
         obs = Observation()
         w = df.observe(obs, F.count(F.lit(1)).alias("n"))
         if self.config.sink_partitions:
@@ -693,8 +645,8 @@ class StreamingPipeline:
         # so overwrite makes the write idempotent under foreachBatch
         # retries and epoch replays after restart (exactly-once, D19).
         # Append here meant a retried epoch held the batch twice — and
-        # with the raw-read-back strategy in _process_batch the doubled
-        # raw rows then amplified into every derived sink.
+        # since every derived sink reads the landing back, the doubled
+        # rows then amplified into all of them.
         writer = w.write.mode("overwrite")
         cap = self.config.max_records_per_file
         if self.config.rotate_mb and table in self._bytes_per_record:
@@ -739,15 +691,8 @@ class StreamingPipeline:
             fh.write(json.dumps({"epoch": epoch_id, "table": table, "path": path}) + "\n")
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        from pyspark.sql import Observation
-
-        _t_enter = _time.monotonic()
-        _t_raw = _t_der = None
-
         # The consumed count (pre-decode input rows, D24) piggybacks on
-        # the first sink job via an Observation BELOW the decode — a
+        # the landing write via an Observation BELOW the decode — a
         # separate count() job per epoch cost a full extra pass over the
         # batch bytes.
         consumed_obs = Observation()
@@ -761,149 +706,86 @@ class StreamingPipeline:
             decoded = self._dedup_against_history(decoded, epoch_id)
         if self.config.neardup_col:
             decoded = self._neardup_against_history(decoded, epoch_id)
-        # Downstream-source strategy: with the raw sink ON, this epoch's
-        # raw parquet IS the cache — decode runs exactly once (inside the
-        # raw write) and norm/custom derive from a columnar, pruned,
-        # shuffle-free read-back of the just-written files, the same
-        # shape the batch ingest path uses. persist() of the decoded
-        # rows (the previous strategy) materializes fat deserialized
-        # rows a second time in executor memory and was the main
-        # streaming-vs-batch throughput gap; it remains only as the
-        # fallback when the raw sink is toggled off (D14) but derived
-        # tables still need the batch more than once.
-        derived_sinks = (self.normalizer is not None) + (
-            len(self.custom.transforms) if self.custom is not None else 0
+        # Land the batch once: decode (and the dedup gates) run exactly
+        # once, inside this write, and every derived sink, ledger and
+        # runner view reads a columnar, pruned, shuffle-free readback of
+        # the landed files — the shape the batch ingest path uses. With
+        # the raw sink on, the landing IS the raw epoch dir; with it off
+        # (D14) it is an unpublished staging dir, overwritten by a retry
+        # and deleted when the epoch ends.
+        table = self.config.dest_table
+        staging = os.path.join(self.config.output_dir, "_staging")
+        landing = (
+            self._epoch_dir(table, epoch_id)
+            if self.config.write_raw
+            else os.path.join(staging, f"epoch={epoch_id}")
         )
-        # the dedup ledger write is one more consumer of the decoded
-        # batch (it derives from derived_src, so it rides the readback
-        # when the raw sink is on)
-        ledger_sinks = (1 if self.config.dedup_keys else 0) + (
-            1 if self.config.neardup_col else 0
-        )
-        use_readback = self.config.write_raw and (derived_sinks + ledger_sinks) > 0
-        decoded_consumers = int(self.config.write_raw) + (
-            0 if use_readback else derived_sinks + ledger_sinks
-        )
-        to_unpersist = []
-        if decoded_consumers > 1:
-            decoded = decoded.persist()
-            to_unpersist.append(decoded)
         ledger: Future | None = None
-        _ledger_wait = 0.0
         try:
-            raw_n = norm_n = custom_n = 0
-            # (table, path, schema): the schema of what was written rides
-            # along so every per-epoch re-read below is schema-pinned —
-            # an unpinned read re-infers from parquet footers on the
-            # driver each epoch (r13's readback finding, r14 applied to
-            # the runner's view reads too)
-            written: list[tuple[str, str, object]] = []
-
-            if self.config.write_raw:
-                p = self._epoch_dir(self.config.dest_table, epoch_id)
-                raw_n = self._write(decoded, p, self.config.dest_table)
-                written.append((self.config.dest_table, p, decoded.schema))
-            _t_raw = _time.monotonic()
-
+            landed_n = self._write(decoded, landing, table)
             # readback with the KNOWN schema (decoded's own) — schema
-            # inference re-reads every epoch file's footer on the
-            # driver before the first derived job can plan; with the
-            # schema pinned the read is pure metadata (r13, measured
-            # dominant per-epoch fixed term in STREAM_FIXED_COST).
-            derived_src = (
-                self.spark.read.schema(decoded.schema).parquet(written[0][1])
-                if use_readback
-                else decoded
+            # inference re-reads every epoch file's footer on the driver
+            # before the first derived job can plan; with the schema
+            # pinned the read is pure metadata (r13, measured dominant
+            # per-epoch fixed term in STREAM_FIXED_COST).
+            landed = self.spark.read.schema(decoded.schema).parquet(landing)
+            # The ledgers record what actually landed and run
+            # concurrently with the derived sinks and the post-SQL.
+            ledger = self._start_ledgers(landed, epoch_id)
+            raw_n = landed_n if self.config.write_raw else 0
+            norm_n = custom_n = 0
+            # (table, path, schema) of each published sink: the schema of
+            # what was written rides along so every per-epoch re-read
+            # below is schema-pinned
+            written: list[tuple[str, str, object]] = (
+                [(table, landing, decoded.schema)] if self.config.write_raw else []
             )
-            # The ledgers record what actually landed, so they derive
-            # from the landed raw files and run concurrently with the
-            # derived sinks and the post-SQL. In the persist fallback
-            # they start after the derived sinks: the first consumer of
-            # a persisted frame must fill the cache alone, because the
-            # consumed Observation counts only the partitions its own
-            # job's tasks compute.
-            if use_readback:
-                ledger = self._start_ledgers(derived_src, epoch_id)
 
             if self.normalizer is not None:
-                norm_table = f"{self.config.dest_table}_norm"
+                norm_table = f"{table}_norm"
                 p = self._epoch_dir(norm_table, epoch_id)
-                norm_df = self.normalizer.apply(derived_src)
+                norm_df = self.normalizer.apply(landed)
                 norm_n = self._write(norm_df, p, norm_table)
                 written.append((norm_table, p, norm_df.schema))
 
             if self.custom is not None:
-                for table, df in self.custom.apply_all(derived_src).items():
-                    p = self._epoch_dir(table, epoch_id)
-                    custom_n += self._write(df, p, table)
-                    written.append((table, p, df.schema))
-            if not use_readback:
-                ledger = self._start_ledgers(derived_src, epoch_id)
-            _t_der = _time.monotonic()
+                for name, df in self.custom.apply_all(landed).items():
+                    p = self._epoch_dir(name, epoch_id)
+                    custom_n += self._write(df, p, name)
+                    written.append((name, p, df.schema))
 
             # D18: post-SQL over the *written* epoch output (the closed
             # file, not the in-flight batch) — true to DuckRunner.
             if self.runner is not None:
-                for table, path, schema in written:
-                    # schema-pinned: the file was just written from a
-                    # frame whose schema we hold — inference would
-                    # re-read every footer on the driver, per epoch.
-                    # The raw table's view is the readback itself.
+                for name, path, schema in written:
+                    # the raw table's view is the readback itself
                     view = (
-                        derived_src
-                        if use_readback and path == written[0][1]
+                        landed
+                        if path == landing
                         else self.spark.read.schema(schema).parquet(path)
                     )
-                    view.createOrReplaceTempView(table)
+                    view.createOrReplaceTempView(name)
                 self.runner.run(self.spark, epoch_id)
 
             # the ledgers land before any path is deleted or published
             if ledger is not None:
-                _t_wait = _time.monotonic()
                 ledger.result()
-                _ledger_wait = _time.monotonic() - _t_wait
 
             if self.runner is not None and self.runner.delete_on_done:
-                import shutil
-
                 for _, path, _schema in written:
                     shutil.rmtree(path, ignore_errors=True)
 
-            for table, path, _schema in written:
-                self._publish_path(path, epoch_id, table)
-            # no sink materialized the batch (all stages toggled off):
-            # count directly, else read the piggybacked observation (the
-            # ledger write also fires it — it consumes the observed node)
-            materialized = bool(written) or bool(
-                self.config.dedup_keys or self.config.neardup_col
-            )
-            consumed = int(consumed_obs.get["n"]) if materialized else decoded.count()
+            for name, path, _schema in written:
+                self._publish_path(path, epoch_id, name)
+            consumed = int(consumed_obs.get["n"])
             self.metrics.record_batch(epoch_id, consumed, raw_n, norm_n, custom_n)
         finally:
             if ledger is not None:
                 # a failed epoch must not leave a ledger write racing
                 # its retry; the epoch's own exception wins
                 ledger.exception()
-            for df in to_unpersist:
-                df.unpersist()
-            _t_exit = _time.monotonic()
-            self.epoch_trace.append(
-                {
-                    "epoch": int(epoch_id),
-                    "enter": _t_enter,
-                    "exit": _t_exit,
-                    "raw_s": round((_t_raw or _t_exit) - _t_enter, 3),
-                    "derived_s": round(
-                        (_t_der or _t_raw or _t_exit)
-                        - (_t_raw or _t_exit),
-                        3,
-                    ),
-                    "epilogue_s": round(
-                        _t_exit - (_t_der or _t_raw or _t_exit), 3
-                    ),
-                    "ledger_wait_s": round(_ledger_wait, 3),
-                }
-            )
+            if not self.config.write_raw:
+                shutil.rmtree(staging, ignore_errors=True)
 
     # -- lifecycle (D17/D19/D25) -------------------------------------------
     def start(self):

@@ -279,7 +279,7 @@ def test_ledger_horizon_readmits_old_content(spark, tmp_path):
     assert pipe2.metrics.records_inserted == 200
 
 
-def _direct_pipeline(spark, out: str) -> StreamingPipeline:
+def _direct_pipeline(spark, out: str, **cfg) -> StreamingPipeline:
     """A pipeline with no stream: _process_batch is driven directly, as
     foreachBatch would call it on a retry or a replay."""
     from quacfka_spark.plans.normalizer import NormalizerSpec
@@ -292,6 +292,7 @@ def _direct_pipeline(spark, out: str) -> StreamingPipeline:
             dest_table="messages",
             available_now=True,
             dedup_keys=["r.user_id", "r.amount"],
+            **cfg,
         ),
         decode=lambda df: decode_json(df, NESTED_SCHEMA),
         normalizer=NormalizerSpec(
@@ -368,7 +369,6 @@ def test_ledger_thread_inherits_local_properties(spark, tmp_path):
     assert seen["prop"] == "epoch-3"
     assert seen["thread"] != threading.get_ident()
     assert _ledger_rows(spark, out, 3) == (50, 50)
-    assert pipe.epoch_trace[-1]["ledger_wait_s"] >= 0
 
 
 def test_ledger_rows_equal_inserted_rows_under_in_batch_duplicates(spark, tmp_path):
@@ -385,3 +385,52 @@ def test_ledger_rows_equal_inserted_rows_under_in_batch_duplicates(spark, tmp_pa
     for epoch, n in inserted.items():
         assert _ledger_rows(spark, out, epoch) == (n, n)
     assert pipe.metrics.records_consumed == 500
+
+
+def test_raw_off_epoch_lands_in_staging_and_cleans_up(spark, tmp_path):
+    """With the raw sink off (D14) the epoch still lands its batch once,
+    in an unpublished staging dir the normalizer and the ledger read
+    back; the dir is gone when the epoch ends, only the norm path is
+    published, and the consumed count still comes from the landing."""
+    out = str(tmp_path / "out")
+    pipe = _direct_pipeline(spark, out, write_raw=False)
+    pipe._process_batch(_batch(spark, 0, 100, copies=2), 0)
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert not os.path.exists(os.path.join(out, "messages"))
+    assert pipe.completed_paths == [os.path.join(out, "messages_norm", "epoch=0")]
+    # (consumed, raw, norm, custom): 200 rows in, 100 distinct land
+    assert pipe.metrics.epoch_rows() == {0: (200, 0, 100, 0)}
+    assert _ledger_rows(spark, out, 0) == (100, 100)
+
+
+def test_raw_off_epoch_retry_gives_same_counts_and_feed(spark, tmp_path):
+    """A raw-off epoch whose ledger write fails leaves no staging dir and
+    publishes nothing; its retry, and a replay after that, give the same
+    counts, the same feed and the same sinks."""
+    out = str(tmp_path / "out")
+    pipe = _direct_pipeline(spark, out, write_raw=False)
+    batch = _batch(spark, 0, 100, copies=2)
+
+    def boom(src, epoch_id):
+        raise RuntimeError("ledger write failed")
+
+    pipe._write_ledger = boom
+    with pytest.raises(RuntimeError, match="ledger write failed"):
+        pipe._process_batch(batch, 0)
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert pipe.completed_paths == []
+    del pipe._write_ledger
+
+    def feed() -> str:
+        with open(pipe._paths_log) as fh:
+            return fh.read()
+
+    pipe._process_batch(batch, 0)
+    rows, first_feed = pipe.metrics.epoch_rows(), feed()
+    pipe._process_batch(batch, 0)
+    assert pipe.metrics.epoch_rows() == rows == {0: (200, 0, 100, 0)}
+    assert feed() == first_feed
+    assert pipe.completed_paths == [os.path.join(out, "messages_norm", "epoch=0")]
+    assert not os.path.exists(os.path.join(out, "_staging"))
+    assert spark.read.parquet(os.path.join(out, "messages_norm")).count() == 100
+    assert _ledger_rows(spark, out, 0) == (100, 100)

@@ -497,48 +497,47 @@ def test_sqlrunner_guard_handles_double_quotes_and_escapes():
         SQLRunner(exec=True, queries=["SELECT 'it''s (fine)' AS x"])
 
 
-def test_sqlrunner_guard_escaped_string_literals_mode():
+def test_sqlrunner_guard_escaped_string_literals_mode(spark):
     """Under spark.sql.parser.escapedStringLiterals=true backslash is a
     LITERAL character, so 'dir\\' is a terminated string; the default
     scanner would swallow the closing quote and scan real SQL as
     literal content."""
     q = "SELECT * FROM t WHERE p = 'dir\\' AND q = ')'"
-    # Hive-compat session: the statement is result-bearing -> rejected
-    with pytest.raises(ValueError):
-        SQLRunner(exec=True, queries=[q], escaped_string_literals=True)
-    # an effect statement with a trailing-backslash literal is accepted
-    SQLRunner(
-        exec=True,
-        queries=["INSERT INTO u SELECT * FROM t WHERE p = 'dir\\'"],
-        escaped_string_literals=True,
-    )
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        # Hive-compat session: the statement is result-bearing -> rejected
+        with pytest.raises(ValueError):
+            SQLRunner(exec=True, queries=[q])
+        # an effect statement with a trailing-backslash literal is accepted
+        SQLRunner(
+            exec=True,
+            queries=["INSERT INTO u SELECT * FROM t WHERE p = 'dir\\'"],
+        )
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
 def test_sqlrunner_live_mode_revalidation_is_stateless(spark):
-    """run() re-validates a live session whose parser mode differs from
-    the constructor's, but with a LOCAL flag: the declared mode is never
-    mutated, a once-validated mode is cached (no rescan per epoch), and
-    a statement that is effect-only in one mode but result-bearing in
-    the other still fails EVERY run under the rejecting mode — including
-    retried epochs after a prior failure."""
+    """run() re-validates every statement under the live session's
+    parser mode on every epoch: a statement that is effect-only in one
+    mode but result-bearing in the other still fails EVERY run under
+    the rejecting mode — including retried epochs after a prior
+    failure."""
     ok = SQLRunner(exec=True, queries=["SET spark.quacfka.test.flag=1"])
+    # INSERT verb by default (the \' keeps the literal open until the
+    # quote before the comma, so ') x' is literal content); under
+    # escapedStringLiterals the literal ends at \', the depth closes
+    # early, and the trailing quote swallows the INSERT — no effect
+    # verb is visible, so the Hive-compat session must reject it.
+    tricky = "WITH c AS (SELECT 'a\\') x', 1) INSERT INTO u SELECT * FROM c"
+    r = SQLRunner(exec=True, queries=[tricky])  # default mode: accepted
     spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
     try:
         ok.run(spark, 0)
-        assert ok.escaped_string_literals is False  # declared mode kept
-        assert ok._validated_modes == {False, True}  # cached, no rescan
-        ok.run(spark, 1)  # second epoch: cache-hit path
+        ok.run(spark, 1)  # second epoch: scanned again, still accepted
 
-        # INSERT verb by default (the \' keeps the literal open until the
-        # quote before the comma, so ') x' is literal content); under
-        # escapedStringLiterals the literal ends at \', the depth closes
-        # early, and the trailing quote swallows the INSERT — no effect
-        # verb is visible, so the Hive-compat session must reject it.
-        tricky = "WITH c AS (SELECT 'a\\') x', 1) INSERT INTO u SELECT * FROM c"
-        r = SQLRunner(exec=True, queries=[tricky])  # default mode: accepted
         with pytest.raises(ValueError):
             r.run(spark, 0)
-        assert r.escaped_string_literals is False
         with pytest.raises(ValueError):  # retried epoch re-rejects
             r.run(spark, 0)
     finally:

@@ -13,10 +13,12 @@ each epoch's wall from two independent vantage points:
   getBatch + queryPlanning (source planning), walCommit +
   commitOffsets (the exactly-once checkpoint barrier), addBatch (our
   foreachBatch body), triggerExecution (the whole epoch);
-- the PIPELINE's per-epoch phase trace (StreamingPipeline.epoch_trace):
-  raw-sink write vs derived-sink (readback + normalizer) write vs
-  epilogue (publish/metrics), plus the inter-epoch gap (epoch N exit
-  to N+1 enter = everything the engine does between addBatch calls).
+- Spark's EVENT LOG, folded per epoch by the benchmark's own
+  ``perfbench/workloads.pipeline_layers``: task seconds per sink (raw
+  write, normalizer write, ledgers, post-SQL runner; summed over
+  parallel tasks, so not walls), GC, jobs per epoch, and driver_s — the
+  wall of addBatch no Spark job covers. The dominant fixed term is
+  picked among the engine's walls only.
 
 Two payload sizes give a two-point linear fit per term: the intercept
 is that term's FIXED cost per epoch (what the pass-curve's 2.8 s is
@@ -33,9 +35,11 @@ import os
 import shutil
 import statistics
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 _DUR_KEYS = (
     "latestOffset",
@@ -46,11 +50,13 @@ _DUR_KEYS = (
     "addBatch",
     "triggerExecution",
 )
+# event-log layers fitted like the engine terms (seconds per epoch)
+_SPLIT_KEYS = ("raw_task_s", "norm_task_s", "ledger_task_s", "runner_task_s",
+               "gc_s", "driver_s")
 
 
-def run_one(spark, rows: int, epochs: int, work_dir: str) -> dict:
-    from pyspark.sql import functions as F  # noqa: F401
-
+def run_one(spark, rows: int, epochs: int, work_dir: str) -> tuple[dict, dict]:
+    """One run: its report, and what the event-log fold needs."""
     from quacfka_spark.bench_ingest import SHAPES, _codec, _gen_bytes
     from quacfka_spark.plans.normalizer import NormalizerSpec
     from quacfka_spark.streaming import PipelineConfig, StreamingPipeline
@@ -88,46 +94,25 @@ def run_one(spark, rows: int, epochs: int, work_dir: str) -> dict:
     if err is not None:
         raise RuntimeError(str(err))
 
-    # engine vantage: per-epoch durationMs (skip epoch 0 — it pays
-    # stream start + codegen warmup and would skew a median of 8)
-    prog = [p for p in q.recentProgress if p.get("batchId", 0) != 0]
+    # per-epoch medians skip epoch 0 — it pays stream start + codegen
+    # warmup and would skew a median of 8
+    prog = [p for p in q.recentProgress if p.batchId != 0]
     dur = {
-        k: statistics.median(
-            p["durationMs"].get(k, 0) / 1000.0 for p in prog
-        )
+        k: statistics.median(p.durationMs.get(k, 0) / 1000.0 for p in prog)
         for k in _DUR_KEYS
         if prog
     }
-    # pipeline vantage: in-batch split + inter-epoch gap
-    tr = sorted(pipe.epoch_trace, key=lambda t: t["epoch"])
-    gaps = [
-        round(b["enter"] - a["exit"], 3)
-        for a, b in zip(tr, tr[1:])
-    ]
-    split = {
-        k: statistics.median(t[k] for t in tr[1:])
-        for k in ("raw_s", "derived_s", "epilogue_s")
-        if len(tr) > 1
-    }
     shutil.rmtree(work_dir, ignore_errors=True)
-    return {
+    report = {
         "rows": rows,
         "epochs": epochs,
         "rows_per_epoch": rows // epochs,
         "mb": round(mb, 1),
         "wall_s": round(wall, 2),
         "mb_per_s": round(mb / wall, 1),
-        "median_epoch_durations_s": {
-            k: round(v, 3) for k, v in dur.items()
-        },
-        "median_inbatch_split_s": {
-            k: round(v, 3) for k, v in split.items()
-        },
-        "median_interepoch_gap_s": (
-            round(statistics.median(gaps), 3) if gaps else None
-        ),
-        "interepoch_gaps_s": gaps,
+        "median_epoch_durations_s": {k: round(v, 3) for k, v in dur.items()},
     }
+    return report, {"query_ids": {str(q.id)}, "progress": prog, "payload_mb": mb}
 
 
 def main() -> None:
@@ -139,43 +124,51 @@ def main() -> None:
     ap.add_argument("--out", default="STREAM_FIXED_COST.json")
     args = ap.parse_args()
 
+    import measure
+    import workloads
     from quacfka_spark.session import get_spark
 
-    spark = get_spark("stream-fixed-cost")
+    event_dir = tempfile.mkdtemp(prefix="stream-fixed-eventlog-")
+    spark = get_spark(
+        "stream-fixed-cost",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": event_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        },
+    )
     rep: dict = {"metric": "stream_fixed_cost", "runs": {}}
-
-    for name, rows in (
-        ("small", args.rows_small),
-        ("large", args.rows_large),
-    ):
-        r = run_one(spark, rows, args.epochs, args.work_dir)
-        rep["runs"][name] = r
-        print(f"# {name}: {json.dumps(r)}", file=sys.stderr)
+    folds = {}
+    for name, rows in (("small", args.rows_small), ("large", args.rows_large)):
+        rep["runs"][name], folds[name] = run_one(spark, rows, args.epochs, args.work_dir)
+        print(f"# {name}: {json.dumps(rep['runs'][name])}", file=sys.stderr)
+    app_id = spark.sparkContext.applicationId
+    spark.stop()
+    with open(os.path.join(event_dir, app_id)) as fh:
+        log = measure.fold_event_log(fh)
+    shutil.rmtree(event_dir, ignore_errors=True)
+    for name, fold in folds.items():
+        layers = workloads.pipeline_layers(log, **fold)
+        rep["runs"][name]["median_inbatch_split_s"] = {
+            k.removeprefix("pipeline."): round(v, 3) for k, v in layers.items()
+        }
 
     # two-point fit per term: fixed = intercept at rows_per_epoch -> 0
     s, l = rep["runs"]["small"], rep["runs"]["large"]
     x1, x2 = s["rows_per_epoch"], l["rows_per_epoch"]
     fit = {}
-    for k in _DUR_KEYS:
-        y1 = s["median_epoch_durations_s"].get(k)
-        y2 = l["median_epoch_durations_s"].get(k)
-        if y1 is None or y2 is None or x2 == x1:
-            continue
-        slope = (y2 - y1) / (x2 - x1)
-        fit[k] = {
-            "fixed_s": round(y1 - slope * x1, 3),
-            "s_per_mrow": round(slope * 1e6, 3),
-        }
-    for k in ("raw_s", "derived_s", "epilogue_s"):
-        y1 = s["median_inbatch_split_s"].get(k)
-        y2 = l["median_inbatch_split_s"].get(k)
-        if y1 is None or y2 is None or x2 == x1:
-            continue
-        slope = (y2 - y1) / (x2 - x1)
-        fit[k] = {
-            "fixed_s": round(y1 - slope * x1, 3),
-            "s_per_mrow": round(slope * 1e6, 3),
-        }
+    for part, keys in (("median_epoch_durations_s", _DUR_KEYS),
+                       ("median_inbatch_split_s", _SPLIT_KEYS)):
+        for k in keys:
+            y1, y2 = s[part].get(k), l[part].get(k)
+            if y1 is None or y2 is None or x2 == x1:
+                continue
+            slope = (y2 - y1) / (x2 - x1)
+            fit[k] = {
+                "fixed_s": round(y1 - slope * x1, 3),
+                "s_per_mrow": round(slope * 1e6, 3),
+            }
     rep["per_epoch_fixed_fit"] = fit
     engine_side = sum(
         fit[k]["fixed_s"]
@@ -186,7 +179,7 @@ def main() -> None:
     rep["engine_side_fixed_s"] = round(engine_side, 3)
     if fit:
         dom = max(
-            (k for k in fit if k != "triggerExecution"),
+            (k for k in _DUR_KEYS[:-1] if k in fit),
             key=lambda k: fit[k]["fixed_s"],
         )
         rep["dominant_fixed_term"] = dom
@@ -196,7 +189,6 @@ def main() -> None:
     print(json.dumps({k: rep[k] for k in
                       ("per_epoch_fixed_fit", "engine_side_fixed_s",
                        "dominant_fixed_term") if k in rep}))
-    spark.stop()
 
 
 if __name__ == "__main__":
