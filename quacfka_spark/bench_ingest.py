@@ -513,6 +513,8 @@ def run_streaming_ingest_bench(
     mb = _gen_bytes(
         spark, rows, src, cores * epochs * grain, encode, sh.payload
     )
+    # same warm slice as the batch twin, so pass 1 does not ride the ramp
+    _warm_up(decode(spark.read.parquet(src).limit(rows // 8)).select("r.*"), work_dir)
     reports: list[dict] = []
 
     def one_pass() -> None:

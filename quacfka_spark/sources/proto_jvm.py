@@ -27,18 +27,14 @@ wire type is NOT malformed: both decoders treat it as an unknown field
 from __future__ import annotations
 
 import hashlib
-import os
 import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from quacfka_spark.session import JAR_PATH
 from quacfka_spark.sources.proto_wire import MessageSpec, decode_protobuf_wire
-
-JAR_PATH = os.path.abspath(
-    os.path.join(os.path.dirname(__file__), "..", "jars", "quacfka-jvm.jar")
-)
 
 _DECODE_CLASS = "quacfka.jvm.ProtoDecodeUDF"
 _ENCODE_CLASS = "quacfka.jvm.ProtoEncodeUDF"
