@@ -514,14 +514,17 @@ def run_streaming_ingest_bench(
         spark, rows, src, cores * epochs * grain, encode, sh.payload
     )
     # same warm slice as the batch twin, so pass 1 does not ride the ramp
-    _warm_up(decode(spark.read.parquet(src).limit(rows // 8)).select("r.*"), work_dir)
+    warm = spark.read.parquet(src).limit(rows // 8)
+    _warm_up(decode(warm).select("r.*"), work_dir)
+    warm_src = os.path.join(work_dir, "warm_src")
+    warm.write.parquet(warm_src)
     reports: list[dict] = []
 
-    def one_pass() -> None:
+    def one_pass(path: str) -> None:
         source = (
             spark.readStream.schema("value binary")
             .option("maxFilesPerTrigger", str(cores * grain))
-            .parquet(src)
+            .parquet(path)
         )
         pipe = StreamingPipeline(
             spark,
@@ -541,7 +544,10 @@ def run_streaming_ingest_bench(
         q.awaitTermination()
         reports.append(pipe.metrics.report())
 
-    walls = [_timed(one_pass) for _ in range(PASSES)]
+    # one untimed pass over the warm slice: the first StreamingQuery
+    # start and foreachBatch round-trip, which _warm_up never touches
+    one_pass(warm_src)
+    walls = [_timed(lambda: one_pass(src)) for _ in range(PASSES)]
     shutil.rmtree(work_dir, ignore_errors=True)
     rep = reports[-1]
     return {

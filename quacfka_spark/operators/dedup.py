@@ -25,7 +25,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from quacfka_spark.catalog import load_views
@@ -1344,6 +1344,11 @@ def label_propagate(pairs: DataFrame, max_rounds: int = 100) -> DataFrame:
     adversarial diameters; only a scalar changed-count ever reaches the
     driver).
 
+    One SQL execution per round: the first round is one edge aggregate
+    (``least(v, min(b))``), and every later round carries the previous
+    label through its min-aggregate, so the changed-count is an
+    Observation on the round's own localCheckpoint job.
+
     Runs to CONVERGENCE (changed == 0) — rounds track the component
     diameter, and LSH near-dup components are near-cliques (2-3 rounds).
     ``max_rounds`` is a runaway backstop, not an accuracy knob: hitting
@@ -1354,35 +1359,44 @@ def label_propagate(pairs: DataFrame, max_rounds: int = 100) -> DataFrame:
         .union(pairs.select(F.col("j").alias("a"), F.col("i").alias("b")))
         .persist()
     )
+    labels, changed = _checkpoint_changes(
+        edges.groupBy(F.col("a").alias("v")).agg(
+            F.least(F.col("a"), F.min("b")).alias("lbl"), F.col("a").alias("old")
+        )
+    )
+    for _ in range(max_rounds - 1):  # the seed aggregate was round 1
+        if changed == 0:
+            break
+        prop = edges.join(labels, edges["a"] == labels["v"]).select(
+            F.col("b").alias("v"), "lbl", F.lit(None).alias("old")
+        )
+        labels, changed = _checkpoint_changes(
+            labels.select("v", "lbl", F.col("lbl").alias("old"))
+            .union(prop)
+            .groupBy("v")
+            .agg(F.min("lbl").alias("lbl"), F.max("old").alias("old"))
+        )
+    edges.unpersist()
+    if changed:
+        raise RuntimeError(
+            f"label propagation did not converge in {max_rounds} rounds — "
+            "component diameter exceeds the backstop; use the large-star/"
+            "small-star contraction variant for long-chain graphs"
+        )
+    return labels
+
+
+def _checkpoint_changes(agg: DataFrame) -> tuple[DataFrame, int]:
+    """A round's (v, lbl), materialized by localCheckpoint, and the count
+    of rows whose lbl differs from the carried ``old`` label, observed on
+    that same job."""
+    obs = Observation()
     labels = (
-        edges.select(F.col("a").alias("v"))
-        .distinct()
-        .select("v", F.col("v").alias("lbl"))
+        agg.observe(obs, F.count_if(F.col("lbl") != F.col("old")).alias("n"))
+        .select("v", "lbl")
         .localCheckpoint()
     )
-    for _ in range(max_rounds):
-        prop = edges.join(labels, edges["a"] == labels["v"]).select(
-            F.col("b").alias("v"), "lbl"
-        )
-        new_labels = (
-            labels.union(prop).groupBy("v").agg(F.min("lbl").alias("lbl"))
-        ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "v")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            edges.unpersist()
-            return labels
-    edges.unpersist()
-    raise RuntimeError(
-        f"label propagation did not converge in {max_rounds} rounds — "
-        "component diameter exceeds the backstop; use the large-star/"
-        "small-star contraction variant for long-chain graphs"
-    )
+    return labels, obs.get["n"]
 
 
 # --------------------------------------------------------------------------

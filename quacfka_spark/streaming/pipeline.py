@@ -22,7 +22,9 @@ Reference mapping (SURVEY.md §2a):
   derived sinks and the post-SQL, as the reference's K inserters overlap
   (duck.go:299-546); the epoch joins it before it publishes any path.
 - D18 ``SQLRunner``: ordered SQL on each completed epoch, exec mode or
-  callback mode, optional delete-when-done (duck.go:38-134).
+  callback mode, optional delete-when-done (duck.go:38-134). Exec mode
+  is effect-only; the session's own SQL parser tells a command from a
+  row-returning query, and ``spark.sql`` runs each command eagerly.
 - D20 completed-path feed: in-process list + JSONL control log replaces
   the bounded ``chan string`` (quacfka.go:65-70, duck.go:279-285).
 - D21 stage toggles: pass any source DataFrame (mock/kafka/file), skip
@@ -44,7 +46,6 @@ any other parquet read.
 
 from __future__ import annotations
 
-import re
 import json
 import os
 import shutil
@@ -57,6 +58,7 @@ from dataclasses import dataclass, field
 from functools import cached_property
 
 from pyspark import InheritableThread
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -205,18 +207,6 @@ class PipelineMetrics:
             return dict(self._recent)
 
 
-def _escaped_literals(spark: SparkSession | None) -> bool:
-    """The session's ``spark.sql.parser.escapedStringLiterals`` (False
-    with no session). Spark's default parser treats backslash as an
-    escape inside '...'/"..." literals; a Hive-compat session (true)
-    treats it as a literal character, so 'x\\' is a TERMINATED string
-    there. Scanning under the wrong mode swallows the closing quote and
-    runs verb/depth detection over literal content."""
-    if spark is None:
-        return False
-    return spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() == "true"
-
-
 @dataclass
 class SQLRunner:
     """D18: ordered SQL statements run against each completed epoch's
@@ -227,6 +217,16 @@ class SQLRunner:
     called with (spark, epoch_id) and issues its own queries
     (duck.go:92-100 callback mode). ``delete_on_done`` removes the
     epoch's raw dir afterwards (duck.go:122-132).
+
+    Exec mode has the reference's effect-only contract (duck.go:70-72:
+    "queries that aggregate to another table as well as EXPORT/COPY TO
+    statements"). The session's own SQL parser decides what a statement
+    is: one that does not parse, parses as a query (it returns rows), or
+    is a SQL script (``spark.sql`` collects a script's last result onto
+    the driver) is rejected with ``ValueError``. The constructor and
+    ``add_queries`` check under the active session when there is one;
+    ``run()`` re-checks under the live session, so its parser settings
+    (ANSI reserved keywords, escaped literals) always apply.
     """
 
     queries: list[str] = field(default_factory=list)
@@ -234,120 +234,42 @@ class SQLRunner:
     fn: Callable[[SparkSession, int], None] | None = None
     delete_on_done: bool = False
 
-    # Statement prefixes that run for effect (side-effecting DDL/DML) —
-    # anything else in exec mode is a result-bearing query whose rows
-    # would be materialized ON THE DRIVER by the effect-only .collect(),
-    # an unbounded-memory trap at scale. The reference's exec mode has
-    # the same effect-only contract (duck.go:70-72: "queries that
-    # aggregate to another table as well as EXPORT/COPY TO statements").
-    _EFFECT_PREFIXES = (
-        "insert", "create", "replace", "drop", "alter", "truncate",
-        "delete", "update", "merge", "copy", "export", "cache",
-        "uncache", "refresh", "set", "msck", "analyze", "optimize",
-        "vacuum",
-    )
-    # statement keywords that can follow a CTE prologue at depth 0 —
-    # used to locate the statement proper after "WITH name AS (...), ..."
-    _STMT_KEYWORDS = frozenset(
-        {"select", "values", "table", "from"}  # result-bearing forms
-        | {"insert", "create", "replace", "merge", "delete", "update",
-           "copy", "export"}
-    )
-
     def __post_init__(self) -> None:
-        esc = _escaped_literals(SparkSession.getActiveSession())
-        for q in self.queries:
-            self._check_effect_only(q, esc)
+        self._check(SparkSession.getActiveSession(), self.queries)
 
-    def _top_level_keyword(self, q: str, esc: bool) -> str | None:
-        """The statement's first DEPTH-0 keyword, skipping string
-        literals, -- and /* */ comments, and parenthesized bodies: for a
-        plain statement that is its first word; for a WITH statement it
-        is the keyword after the CTE definitions (so "WITH c AS
-        (SELECT ...) SELECT" resolves to select, and a 'delete' inside a
-        string literal or a CTE body can never masquerade as the
-        statement's verb). ``esc`` is the session's parser mode (see
-        :func:`_escaped_literals`)."""
-        depth = 0
-        i, n = 0, len(q)
-        words: list[str] = []
-        while i < n:
-            c = q[i]
-            if c in ("'", '"', "`"):
-                # Spark treats both '...' and "..." as string literals
-                # (backslash escapes and doubled-quote escapes active);
-                # backticked identifiers can also contain parens/words.
-                # All three must be skipped or a quoted ')' / keyword
-                # corrupts the depth tracking and the verb detection.
-                quote = c
-                i += 1
-                while i < n:
-                    if q[i] == "\\" and quote != "`" and not esc:
-                        i += 2
-                        continue
-                    if q[i] == quote:
-                        if i + 1 < n and q[i + 1] == quote:  # '' escape
-                            i += 2
-                            continue
-                        i += 1
-                        break
-                    i += 1
-            elif q.startswith("--", i):
-                nl = q.find("\n", i)
-                i = n if nl < 0 else nl + 1
-            elif q.startswith("/*", i):
-                e = q.find("*/", i)
-                i = n if e < 0 else e + 2
-            elif c == "(":
-                depth += 1
-                i += 1
-            elif c == ")":
-                depth = max(0, depth - 1)
-                i += 1
-            elif depth == 0 and (c.isalpha() or c == "_"):
-                m = re.match(r"[A-Za-z_][A-Za-z_0-9]*", q[i:])
-                words.append(m.group(0).lower())
-                i += len(m.group(0))
-            else:
-                i += 1
-        if not words:
-            return None
-        if words[0] != "with":
-            return words[0]
-        for w in words[1:]:  # skip CTE names / AS / RECURSIVE / commas
-            if w in self._STMT_KEYWORDS:
-                return w
-        return None
-
-    def _check_effect_only(self, q: str, esc: bool) -> None:
-        if not self.exec:
+    def _check(self, spark: SparkSession | None, queries: list[str]) -> None:
+        if not self.exec or spark is None:
             return
-        kw = self._top_level_keyword(q, esc)
-        if kw not in self._EFFECT_PREFIXES:
-            raise ValueError(
-                "SQLRunner(exec=True) statements run for effect only; "
-                f"got a result-bearing statement {q.strip()[:60]!r}. "
-                "Use INSERT/CREATE/COPY-style SQL, or exec=False with "
-                "fn=... to consume results yourself."
-            )
+        parser = spark._jsparkSession.sessionState().sqlParser()
+        for q in queries:
+            try:
+                plan = parser.parsePlan(q)
+            except ParseException as e:
+                raise ValueError(f"SQLRunner cannot parse {q[:60]!r}") from e
+            try:
+                parser.parseQuery(q)
+                rows = True
+            except ParseException:
+                rows = plan.nodeName() == "CompoundBody"
+            if rows:
+                raise ValueError(
+                    "SQLRunner(exec=True) statements run for effect only; "
+                    f"got a result-bearing statement {q.strip()[:60]!r}. "
+                    "Use INSERT/CREATE-style SQL, or exec=False with "
+                    "fn=... to consume results yourself."
+                )
 
     def add_queries(self, queries: list[str]) -> None:
-        esc = _escaped_literals(SparkSession.getActiveSession())
-        for q in queries:
-            self._check_effect_only(q, esc)
+        self._check(SparkSession.getActiveSession(), queries)
         self.queries.extend(queries)
 
     def run(self, spark: SparkSession, epoch_id: int) -> None:
         if self.exec:
-            # re-scan under the LIVE session's parser mode every epoch (a
-            # few us per statement): a statement mis-classified under
-            # another mode is exactly the driver-materialization trap the
-            # guard exists to block
-            esc = _escaped_literals(spark)
+            # every statement is checked before any runs; spark.sql runs
+            # commands eagerly, so there is nothing to collect
+            self._check(spark, self.queries)
             for q in self.queries:
-                self._check_effect_only(q, esc)
-            for q in self.queries:
-                spark.sql(q).collect()
+                spark.sql(q)
         elif self.fn is not None:
             self.fn(spark, epoch_id)
 

@@ -340,7 +340,7 @@ def test_d15_size_based_rotation(spark, tmp_path):
         assert os.path.getsize(f) <= cap_bytes * 2, (f, os.path.getsize(f))
 
 
-def test_sqlrunner_exec_mode_rejects_result_bearing_sql():
+def test_sqlrunner_exec_mode_rejects_result_bearing_sql(spark):
     """Exec mode is effect-only (duck.go:70-72): a bare SELECT would be
     silently collect()ed onto the driver — unbounded memory at scale —
     so both the constructor and add_queries reject it up front."""
@@ -362,7 +362,7 @@ def test_sqlrunner_exec_mode_rejects_result_bearing_sql():
     SQLRunner(exec=False, queries=["SELECT 1"])
 
 
-def test_sqlrunner_exec_mode_cte_and_comment_handling():
+def test_sqlrunner_exec_mode_cte_and_comment_handling(spark):
     """The guard must see through syntax disguises: a CTE-prefixed bare
     SELECT (WITH c AS (...) SELECT ...) is still result-bearing, a
     CTE-prefixed INSERT is effectful, and leading line comments must
@@ -378,7 +378,7 @@ def test_sqlrunner_exec_mode_cte_and_comment_handling():
         SQLRunner(exec=True, queries=["-- looks harmless\nSELECT 1"])
 
 
-def test_sqlrunner_guard_sees_through_literals_and_block_comments():
+def test_sqlrunner_guard_sees_through_literals_and_block_comments(spark):
     """The top-level-keyword scanner: effect words inside string
     literals or CTE bodies must NOT legitimize a result-bearing CTE
     query; block comments must not condemn an effectful one."""
@@ -464,7 +464,7 @@ def test_epoch_retry_is_idempotent(spark, tmp_path):
     assert pipe2.completed_paths == []  # nothing NEW completed in-process
 
 
-def test_sqlrunner_guard_handles_double_quotes_and_escapes():
+def test_sqlrunner_guard_handles_double_quotes_and_escapes(spark):
     """Spark SQL double-quoted literals and escaped quotes must not
     corrupt the depth/keyword scan: a quoted ')' or a quoted keyword is
     content, not syntax."""
@@ -497,51 +497,76 @@ def test_sqlrunner_guard_handles_double_quotes_and_escapes():
         SQLRunner(exec=True, queries=["SELECT 'it''s (fine)' AS x"])
 
 
-def test_sqlrunner_guard_escaped_string_literals_mode(spark):
-    """Under spark.sql.parser.escapedStringLiterals=true backslash is a
-    LITERAL character, so 'dir\\' is a terminated string; the default
-    scanner would swallow the closing quote and scan real SQL as
-    literal content."""
-    q = "SELECT * FROM t WHERE p = 'dir\\' AND q = ')'"
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
-    try:
-        # Hive-compat session: the statement is result-bearing -> rejected
-        with pytest.raises(ValueError):
-            SQLRunner(exec=True, queries=[q])
-        # an effect statement with a trailing-backslash literal is accepted
+def test_sqlrunner_guard_rejects_select_behind_nested_comment(spark):
+    """Spark's lexer nests /* */ comments: the first */ closes only the
+    inner one, so the INSERT between the two closers is comment and the
+    statement is a bare SELECT."""
+    with pytest.raises(ValueError, match="effect only"):
+        SQLRunner(exec=True, queries=["/* a /* b */ INSERT */ SELECT 1"])
+
+
+def test_sqlrunner_guard_accepts_insert_behind_nested_comment(spark):
+    """The mirror case: the SELECT is comment, the statement an INSERT."""
+    SQLRunner(
+        exec=True, queries=["/* a /* b */ SELECT */ INSERT INTO t VALUES (1)"]
+    )
+
+
+def test_sqlrunner_guard_rejects_sql_scripts(spark):
+    """spark.sql collects a SQL script's last result onto the driver, so
+    a BEGIN ... END compound is not an effect-only statement."""
+    with pytest.raises(ValueError, match="effect only"):
         SQLRunner(
-            exec=True,
-            queries=["INSERT INTO u SELECT * FROM t WHERE p = 'dir\\'"],
+            exec=True, queries=["BEGIN INSERT INTO t VALUES (1); SELECT 1; END"]
         )
-    finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+
+
+def test_sqlrunner_guard_escaped_string_literals_mode(spark):
+    """Spark's lexer reads \\' as an escaped quote under either
+    spark.sql.parser.escapedStringLiterals setting (the setting changes
+    only how a literal's content is unescaped), so a literal ending in a
+    backslash never terminates and the statement does not parse; an
+    escaped backslash before the quote closes the literal in both."""
+    unterminated = [
+        "SELECT * FROM t WHERE p = 'dir\\' AND q = ')'",
+        "INSERT INTO u SELECT * FROM t WHERE p = 'dir\\'",
+    ]
+    for mode in ("false", "true"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
+        try:
+            for q in unterminated:
+                with pytest.raises(ValueError, match="cannot parse"):
+                    SQLRunner(exec=True, queries=[q])
+            SQLRunner(
+                exec=True,
+                queries=["INSERT INTO u SELECT * FROM t WHERE p = 'dir\\\\'"],
+            )
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
 def test_sqlrunner_live_mode_revalidation_is_stateless(spark):
     """run() re-validates every statement under the live session's
-    parser mode on every epoch: a statement that is effect-only in one
-    mode but result-bearing in the other still fails EVERY run under
-    the rejecting mode — including retried epochs after a prior
-    failure."""
+    parser settings on every epoch: a statement that parses by default
+    but not under ANSI reserved keywords fails EVERY run there —
+    including retried epochs after a prior failure."""
     ok = SQLRunner(exec=True, queries=["SET spark.quacfka.test.flag=1"])
-    # INSERT verb by default (the \' keeps the literal open until the
-    # quote before the comma, so ') x' is literal content); under
-    # escapedStringLiterals the literal ends at \', the depth closes
-    # early, and the trailing quote swallows the INSERT — no effect
-    # verb is visible, so the Hive-compat session must reject it.
-    tricky = "WITH c AS (SELECT 'a\\') x', 1) INSERT INTO u SELECT * FROM c"
-    r = SQLRunner(exec=True, queries=[tricky])  # default mode: accepted
-    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    # FROM is reserved only under ANSI + enforceReservedKeywords
+    r = SQLRunner(exec=True, queries=["INSERT INTO u SELECT 1 AS from"])
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    spark.conf.set("spark.sql.ansi.enforceReservedKeywords", "true")
     try:
         ok.run(spark, 0)
-        ok.run(spark, 1)  # second epoch: scanned again, still accepted
+        ok.run(spark, 1)  # second epoch: checked again, still accepted
 
-        with pytest.raises(ValueError):
+        with pytest.raises(ValueError, match="cannot parse"):
             r.run(spark, 0)
-        with pytest.raises(ValueError):  # retried epoch re-rejects
+        with pytest.raises(ValueError, match="cannot parse"):  # retried epoch
             r.run(spark, 0)
     finally:
-        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+        spark.conf.unset("spark.sql.ansi.enforceReservedKeywords")
+        spark.conf.unset("spark.sql.ansi.enabled")
+        spark.conf.unset("spark.quacfka.test.flag")
 
 
 def test_metrics_replay_overwrites_and_memory_bounded():
