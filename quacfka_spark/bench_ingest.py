@@ -888,38 +888,25 @@ def main() -> None:
     this in a SUBPROCESS so the ingest pipeline owns a fresh JVM — query
     jobs and ingest jobs measurably degrade each other's session (JIT/
     GC aging), and the reference's run likewise owned its process.
-    ``--sustained`` instead runs ONLY the opt-in multi-epoch
-    orchestrator benchmark (see run_sustained_streaming_bench)."""
+    ``--dedup``, ``--neardup`` or ``--sustained`` instead runs ONLY that
+    opt-in benchmark at its function's defaults (run_dedup_/
+    run_neardup_/run_sustained_streaming_bench) and prints its one key."""
     import json
     import sys
 
     from quacfka_spark.session import get_spark
 
     spark = get_spark("quacfka-spark-ingest-bench")
-    if "--dedup" in sys.argv:
-        rows = int(os.environ.get("SPARK_GRAFT_DEDUP_ROWS", "2000000"))
-        out = {"ingest_dedup": run_dedup_streaming_bench(spark, rows=rows)}
-        json.dump(out, sys.stdout)
-        print()
-        spark.stop()
-        return
-    if "--neardup" in sys.argv:
-        rows = int(os.environ.get("SPARK_GRAFT_NEARDUP_ROWS", "1000000"))
-        out = {"ingest_neardup": run_neardup_streaming_bench(spark, rows=rows)}
-        json.dump(out, sys.stdout)
-        print()
-        spark.stop()
-        return
-    if "--sustained" in sys.argv:
-        rows = int(os.environ.get("SPARK_GRAFT_SUSTAINED_ROWS", "500000"))
-        epochs = int(os.environ.get("SPARK_GRAFT_SUSTAINED_EPOCHS", "8"))
-        out = {"ingest_sustained": run_sustained_streaming_bench(
-            spark, rows_per_epoch=rows, epochs=epochs
-        )}
-        json.dump(out, sys.stdout)
-        print()
-        spark.stop()
-        return
+    for flag, key, fn in (
+        ("--dedup", "ingest_dedup", run_dedup_streaming_bench),
+        ("--neardup", "ingest_neardup", run_neardup_streaming_bench),
+        ("--sustained", "ingest_sustained", run_sustained_streaming_bench),
+    ):
+        if flag in sys.argv:
+            json.dump({key: fn(spark)}, sys.stdout)
+            print()
+            spark.stop()
+            return
     out: dict = {}
 
     def block(key: str, fn) -> None:

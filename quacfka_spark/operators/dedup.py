@@ -25,6 +25,8 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -478,6 +480,77 @@ def d03p_minhash_xxhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --------------------------------------------------------------------------
+# The set-comparison core of the certification keys (d03x, d03g, d07qx,
+# d07x, d07wx, d10x, d03r and similarity's sim10wx, sim10qx). One
+# union-with-marker aggregation, NOT intersect + union.distinct: the
+# latter embedded each side's full pipeline under TWO consumers, so
+# every side executed twice per check. Here each side is evaluated once;
+# a key's per-side membership flags then yield the union size, each
+# side's size and the intersection size from a single group-by.
+
+
+def _overlap(keys: list[str], sides: dict[str, DataFrame], *aggs) -> DataFrame:
+    """One row per distinct ``keys`` value over all ``sides``, carrying a
+    0/1 ``in_<name>`` flag per named side (max over the key's rows) and
+    any further per-key aggregates ``aggs``. Each side contributes all
+    its columns, so select a side down to its keys (and what ``aggs``
+    read) first."""
+    tagged = [
+        df.select("*", *(F.lit(int(n == m)).alias(f"in_{n}") for n in sides))
+        for m, df in sides.items()
+    ]
+    return (
+        reduce(lambda x, y: x.unionByName(y), tagged)
+        .groupBy(*keys)
+        .agg(*(F.max(f"in_{n}").alias(f"in_{n}") for n in sides), *aggs)
+    )
+
+
+def _n(expr) -> F.Column:
+    """A count as the sum of 0/1 flags. The coalesce makes it 0 on an
+    empty relation (SUM gives NULL there): a corpus where no side finds
+    a pair must read as a clean pass, not ok=NULL."""
+    return F.coalesce(F.sum(expr), F.lit(0)).cast("long")
+
+
+def _ratio(num: str, den: str) -> F.Column:
+    """num / den to 4dp; NULL when den is 0."""
+    return F.round(
+        F.try_divide(
+            F.col(num).cast("double"),
+            F.nullif(F.col(den), F.lit(0)).cast("double"),
+        ),
+        4,
+    )
+
+
+def _ok(cond: F.Column) -> F.Column:
+    """The 0/1 int gate flag."""
+    return F.when(cond, F.lit(1)).otherwise(F.lit(0)).cast("int")
+
+
+def _recall(
+    exact: DataFrame, approx: DataFrame, keys: list[str], name: str, gate: float
+) -> DataFrame:
+    """Recall certification of ``approx`` (flag ``in_<name>``) against
+    ``exact`` over ``keys``: n_exact, n_<name>, n_common, 4dp recall and
+    ok = recall >= ``gate`` (or nothing exact to recall)."""
+    per = _overlap(keys, {"exact": exact.select(*keys), name: approx.select(*keys)})
+    agg = per.agg(
+        _n("in_exact").alias("n_exact"),
+        _n(f"in_{name}").alias(f"n_{name}"),
+        _n(F.col("in_exact") * F.col(f"in_{name}")).alias("n_common"),
+    )
+    ok = (F.col("n_exact") == 0) | (
+        F.col("n_common") >= F.lit(gate) * F.col("n_exact")
+    )
+    return agg.select(
+        "n_exact", f"n_{name}", "n_common",
+        _ratio("n_common", "n_exact").alias("recall"), _ok(ok).alias("ok"),
+    )
+
+
 @query(
     "d03x_minhash_xxhash",
     oracle="SELECT CAST(1 AS INTEGER) AS ok",
@@ -493,37 +566,19 @@ def d03p_minhash_xxhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keep finding the same near-dups.",
 )
 def d03x_minhash_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # One union-with-marker aggregation, NOT intersect + union.distinct:
-    # the latter embedded each family's full band-join + Jaccard-verify
-    # pipeline under TWO consumers, so every minhash pipeline executed
-    # twice per check. Here each pipeline is evaluated once; a pair's
-    # family membership count then yields both the union size (all
-    # distinct pairs) and the intersection size (pairs seen by both
-    # families) from a single group-by.
-    md5_pairs = minhash_pairs(spark, sf_dir).select(
-        "i", "j", F.lit("md5").alias("fam")
+    per = _overlap(
+        ["i", "j"],
+        {
+            "md5": minhash_pairs(spark, sf_dir).select("i", "j"),
+            "xx": minhash_pairs(spark, sf_dir, family="xxhash64").select("i", "j"),
+        },
     )
-    xx_pairs = minhash_pairs(spark, sf_dir, family="xxhash64").select(
-        "i", "j", F.lit("xx").alias("fam")
-    )
-    per_pair = (
-        md5_pairs.unionByName(xx_pairs)
-        .groupBy("i", "j")
-        .agg(F.count_distinct("fam").alias("fams"))
-    )
-    agg = per_pair.agg(
+    agg = per.agg(
         F.count(F.lit(1)).alias("n_union"),
-        # coalesce: SUM over an empty relation is NULL, and a corpus
-        # where neither family finds a verified pair must read as
-        # perfect agreement (0,0 -> ok=1), not ok=NULL
-        F.coalesce(
-            F.sum((F.col("fams") == 2).cast("int")), F.lit(0)
-        ).alias("n_inter"),
+        _n(F.col("in_md5") * F.col("in_xx")).alias("n_inter"),
     )
-    ok = ((F.col("n_union") - F.col("n_inter")) <= 0.05 * F.col("n_union")).cast(
-        "int"
-    )
-    return agg.select(ok.alias("ok"))
+    ok = F.col("n_union") - F.col("n_inter") <= 0.05 * F.col("n_union")
+    return agg.select(_ok(ok).alias("ok"))
 
 
 # --------------------------------------------------------------------------
@@ -633,7 +688,7 @@ def d03g_neardup_gate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("i"), F.col("b.doc_id").alias("j"))
         .agg(F.count_distinct(F.col("a.band")).alias("nb"))
         .filter(F.col("nb") >= _D03G_MIN_BANDS)
-        .select("i", "j", F.lit(1).alias("in_g"), F.lit(0).alias("in_v"))
+        .select("i", "j")
     )
     # union-ledger semantics delta (r11 advisor): production's
     # _neardup_against_history counts distinct band hits against the
@@ -656,13 +711,12 @@ def d03g_neardup_gate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("uh") >= _D03G_MIN_BANDS)
         .select("doc_id")
     )
-    ver = minhash_pairs(spark, sf_dir, family="xxhash64").select(
-        "i", "j", F.lit(0).alias("in_g"), F.lit(1).alias("in_v")
-    )
-    per = (
-        gate.unionByName(ver)
-        .groupBy("i", "j")
-        .agg(F.max("in_g").alias("in_g"), F.max("in_v").alias("in_v"))
+    per = _overlap(
+        ["i", "j"],
+        {
+            "g": gate,
+            "v": minhash_pairs(spark, sf_dir, family="xxhash64").select("i", "j"),
+        },
     )
     gated_docs = (
         gate.select(F.col("i").alias("doc_id"))
@@ -673,51 +727,22 @@ def d03g_neardup_gate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_union_only")
     )
     agg = per.agg(
-        F.coalesce(F.sum("in_g"), F.lit(0)).cast("long").alias("n_gate"),
-        F.coalesce(F.sum("in_v"), F.lit(0)).cast("long").alias("n_verified"),
-        F.coalesce(F.sum(F.col("in_g") * F.col("in_v")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
+        _n("in_g").alias("n_gate"),
+        _n("in_v").alias("n_verified"),
+        _n(F.col("in_g") * F.col("in_v")).alias("n_common"),
     ).crossJoin(union_only)
-    precision = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_gate"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    recall = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_verified"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
     ok = (
-        F.when(
-            (
-                (F.col("n_gate") == 0)
-                | (
-                    F.col("n_common")
-                    >= F.lit(_D03G_PRECISION_GATE) * F.col("n_gate")
-                )
-            )
-            & (
-                (F.col("n_verified") == 0)
-                | (
-                    F.col("n_common")
-                    >= F.lit(_D03G_RECALL_GATE) * F.col("n_verified")
-                )
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
+        (F.col("n_gate") == 0)
+        | (F.col("n_common") >= F.lit(_D03G_PRECISION_GATE) * F.col("n_gate"))
+    ) & (
+        (F.col("n_verified") == 0)
+        | (F.col("n_common") >= F.lit(_D03G_RECALL_GATE) * F.col("n_verified"))
     )
     return agg.select(
         "n_gate", "n_verified", "n_common", "n_union_only",
-        precision.alias("precision"), recall.alias("recall"),
-        ok.alias("ok"),
+        _ratio("n_common", "n_gate").alias("precision"),
+        _ratio("n_common", "n_verified").alias("recall"),
+        _ok(ok).alias("ok"),
     )
 
 
@@ -1099,20 +1124,13 @@ _D07QX_BOUNDARY = 0.01
     "consistent.",
 )
 def d07qx_int8_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    f32 = _cosine_lsh_pairs(spark, sf_dir).select(
-        "i", "j", "cos", F.lit(1).alias("in_f"), F.lit(0).alias("in_q")
-    )
-    q8 = _cosine_lsh_pairs(spark, sf_dir, verify_payload="int8").select(
-        "i", "j", "cos", F.lit(0).alias("in_f"), F.lit(1).alias("in_q")
-    )
-    per = (
-        f32.unionByName(q8)
-        .groupBy("i", "j")
-        .agg(
-            F.max("in_f").alias("in_f"),
-            F.max("in_q").alias("in_q"),
-            F.max("cos").alias("cosm"),
-        )
+    per = _overlap(
+        ["i", "j"],
+        {
+            "f": _cosine_lsh_pairs(spark, sf_dir),
+            "q": _cosine_lsh_pairs(spark, sf_dir, verify_payload="int8"),
+        },
+        F.max("cos").alias("cosm"),
     )
     far = F.when(
         (F.col("in_f") + F.col("in_q") == 1)
@@ -1120,29 +1138,16 @@ def d07qx_int8_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1),
     ).otherwise(F.lit(0))
     agg = per.agg(
-        F.coalesce(F.sum("in_f"), F.lit(0)).cast("long").alias("n_f32"),
-        F.coalesce(F.sum("in_q"), F.lit(0)).cast("long").alias("n_int8"),
-        F.coalesce(F.sum(F.col("in_f") * F.col("in_q")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
+        _n("in_f").alias("n_f32"),
+        _n("in_q").alias("n_int8"),
+        _n(F.col("in_f") * F.col("in_q")).alias("n_common"),
         F.count(F.lit(1)).cast("long").alias("n_union"),
-        F.coalesce(F.sum(far), F.lit(0)).cast("long").alias("far_flips"),
-    )
-    agreement = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_union"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(F.col("far_flips") == 0, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int")
+        _n(far).alias("far_flips"),
     )
     return agg.select(
         "n_f32", "n_int8", "n_common",
-        agreement.alias("agreement"), "far_flips", ok.alias("ok"),
+        _ratio("n_common", "n_union").alias("agreement"), "far_flips",
+        _ok(F.col("far_flips") == 0).alias("ok"),
     )
 
 
@@ -1293,18 +1298,34 @@ cosine_lsh_pairs = _cosine_lsh_pairs
 
 
 # --------------------------------------------------------------------------
+def _components_oracle(pairs_sql: str, id_col: str, label_col: str) -> str:
+    """DuckDB CTE fragment (after ``WITH RECURSIVE``) for connected
+    components over the (i, j) rows of ``pairs_sql``: a CTE ``lbl``
+    labels every node of a pair with its component's min id. Min-label
+    recursion in state linear in the nodes per round: the seed is
+    LEAST(a, MIN(b)) over each node's edges, every round takes the MIN
+    of a node's own label and its neighbours' labels, and the recursion
+    stops after the first round in which no label fell (MAX(changed)
+    OVER ()). Labels only fall, so each node's final label is its MIN
+    over all rounds. MATERIALIZED keeps DuckDB from re-running the pair
+    query inside the recursion."""
+    return f"""
+    pairs AS MATERIALIZED (SELECT i, j FROM ({pairs_sql})),
+    e AS MATERIALIZED (SELECT i AS a, j AS b FROM pairs
+                       UNION SELECT j AS a, i AS b FROM pairs),
+    cc(v, l, changed) AS (
+      SELECT a, LEAST(a, MIN(b)), 1 FROM e GROUP BY a
+      UNION ALL
+      SELECT c.v, LEAST(c.l, MIN(n.l)),
+             MAX(CAST(LEAST(c.l, MIN(n.l)) < c.l AS INTEGER)) OVER ()
+      FROM cc c JOIN e ON e.a = c.v JOIN cc n ON n.v = e.b
+      WHERE c.changed > 0
+      GROUP BY c.v, c.l),
+    lbl AS (SELECT v AS {id_col}, MIN(l) AS {label_col} FROM cc GROUP BY v)"""
+
+
 _D06_ORACLE = f"""
-    WITH RECURSIVE
-    pairs AS (SELECT i, j FROM ({_D03_ORACLE})),
-    e AS (SELECT i AS a, j AS b FROM pairs
-          UNION SELECT j AS a, i AS b FROM pairs),
-    reach(a, b) AS (
-      SELECT a, b FROM e
-      UNION
-      SELECT r.a, e2.b FROM reach r JOIN e e2 ON e2.a = r.b),
-    lbl AS (
-      SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-      FROM reach GROUP BY a)
+    WITH RECURSIVE {_components_oracle(_D03_ORACLE, "doc_id", "cluster_id")}
     SELECT doc_id, cluster_id FROM lbl ORDER BY doc_id
     """
 
@@ -1324,8 +1345,8 @@ _D06_ORACLE = f"""
     "localCheckpoint for reliable checkpointing and, for adversarial "
     "long-chain graphs, the large-star/small-star contraction variant "
     "(same join-agg building blocks). The only driver-side value per "
-    "round is the scalar changed-count. Oracle: transitive closure via "
-    "recursive CTE over the same pair SQL.",
+    "round is the scalar changed-count. Oracle: min-label recursion "
+    "(recursive CTE, dedup._components_oracle) over the same pair SQL.",
 )
 def d06_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_pairs(spark, sf_dir).select("i", "j")
@@ -1401,17 +1422,9 @@ def _checkpoint_changes(agg: DataFrame) -> tuple[DataFrame, int]:
 
 # --------------------------------------------------------------------------
 _D08_ORACLE = f"""
-    WITH RECURSIVE
-    pairs AS (SELECT i, j FROM ({_d07_oracle().replace("ORDER BY i, j", "")})),
-    e AS (SELECT i AS a, j AS b FROM pairs
-          UNION SELECT j AS a, i AS b FROM pairs),
-    reach(a, b) AS (
-      SELECT a, b FROM e
-      UNION
-      SELECT r.a, e2.b FROM reach r JOIN e e2 ON e2.a = r.b),
-    lbl AS (
-      SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
-      FROM reach GROUP BY a)
+    WITH RECURSIVE {_components_oracle(
+        _d07_oracle().replace("ORDER BY i, j", ""), "vec_id", "cluster_id"
+    )}
     SELECT vec_id, cluster_id,
            (vec_id = cluster_id) AS keep
     FROM lbl ORDER BY vec_id
@@ -1815,54 +1828,11 @@ def d10x_semdedup_recall(
         d05_embedding_cosine(spark, sf_dir)
         .select(F.col("j").alias("vec_id"))
         .distinct()
-        .select(
-            "vec_id", F.lit(1).alias("in_exact"), F.lit(0).alias("in_d10")
-        )
     )
-    d10_dups = (
-        d10_semdedup(spark, sf_dir, probe=probe)
-        .filter(F.col("is_dup") == 1)
-        .select(
-            "vec_id", F.lit(0).alias("in_exact"), F.lit(1).alias("in_d10")
-        )
+    d10_dups = d10_semdedup(spark, sf_dir, probe=probe).filter(
+        F.col("is_dup") == 1
     )
-    per = (
-        exact_dups.unionByName(d10_dups)
-        .groupBy("vec_id")
-        .agg(
-            F.max("in_exact").alias("in_exact"),
-            F.max("in_d10").alias("in_d10"),
-        )
-    )
-    agg = per.agg(
-        F.coalesce(F.sum("in_exact"), F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce(F.sum("in_d10"), F.lit(0)).cast("long").alias("n_d10"),
-        F.coalesce(F.sum(F.col("in_exact") * F.col("in_d10")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
-    )
-    recall = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_exact"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(
-            (F.col("n_exact") == 0)
-            | (
-                F.col("n_common")
-                >= F.lit(_D10X_RECALL_GATE) * F.col("n_exact")
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return agg.select(
-        "n_exact", "n_d10", "n_common", recall.alias("recall"), ok.alias("ok")
-    )
+    return _recall(exact_dups, d10_dups, ["vec_id"], "d10", _D10X_RECALL_GATE)
 
 
 # --------------------------------------------------------------------------
@@ -1927,48 +1897,10 @@ def d07x_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, run at fixture scale; at 100 TB recall is spot-checked on a
     sampled stratum (same plan behind a deterministic md5-fraction
     filter, the x02 sampler)."""
-    exact = d05_embedding_cosine(spark, sf_dir).select(
-        "i", "j", F.lit(1).alias("in_exact"), F.lit(0).alias("in_d07")
-    )
-    d07p = _cosine_lsh_pairs(spark, sf_dir).select(
-        "i", "j", F.lit(0).alias("in_exact"), F.lit(1).alias("in_d07")
-    )
-    per = (
-        exact.unionByName(d07p)
-        .groupBy("i", "j")
-        .agg(
-            F.max("in_exact").alias("in_exact"),
-            F.max("in_d07").alias("in_d07"),
-        )
-    )
-    agg = per.agg(
-        F.coalesce(F.sum("in_exact"), F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce(F.sum("in_d07"), F.lit(0)).cast("long").alias("n_d07"),
-        F.coalesce(F.sum(F.col("in_exact") * F.col("in_d07")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
-    )
-    recall = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_exact"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(
-            (F.col("n_exact") == 0)
-            | (
-                F.col("n_common")
-                >= F.lit(_D07X_RECALL_GATE) * F.col("n_exact")
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return agg.select(
-        "n_exact", "n_d07", "n_common", recall.alias("recall"), ok.alias("ok")
+    return _recall(
+        d05_embedding_cosine(spark, sf_dir),
+        _cosine_lsh_pairs(spark, sf_dir),
+        ["i", "j"], "d07", _D07X_RECALL_GATE,
     )
 
 
@@ -2032,48 +1964,10 @@ def d07wx_recovered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline evaluates once); certification key, fixture-scale by
     role — at 100 TB the same plan runs behind a deterministic
     sampled stratum."""
-    exact = d05_embedding_cosine(spark, sf_dir).select(
-        "i", "j", F.lit(1).alias("in_exact"), F.lit(0).alias("in_rec")
-    )
-    recp = _cosine_lsh_pairs(
-        spark, sf_dir, bits=_D07WX_BITS, bands=_D07WX_BANDS
-    ).select("i", "j", F.lit(0).alias("in_exact"), F.lit(1).alias("in_rec"))
-    per = (
-        exact.unionByName(recp)
-        .groupBy("i", "j")
-        .agg(
-            F.max("in_exact").alias("in_exact"),
-            F.max("in_rec").alias("in_rec"),
-        )
-    )
-    agg = per.agg(
-        F.coalesce(F.sum("in_exact"), F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce(F.sum("in_rec"), F.lit(0)).cast("long").alias("n_rec"),
-        F.coalesce(F.sum(F.col("in_exact") * F.col("in_rec")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
-    )
-    recall = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_exact"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(
-            (F.col("n_exact") == 0)
-            | (
-                F.col("n_common")
-                >= F.lit(_D07WX_RECALL_GATE) * F.col("n_exact")
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return agg.select(
-        "n_exact", "n_rec", "n_common", recall.alias("recall"), ok.alias("ok")
+    return _recall(
+        d05_embedding_cosine(spark, sf_dir),
+        _cosine_lsh_pairs(spark, sf_dir, bits=_D07WX_BITS, bands=_D07WX_BANDS),
+        ["i", "j"], "rec", _D07WX_RECALL_GATE,
     )
 
 
@@ -2160,48 +2054,9 @@ def d03r_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     jac = F.col("c") / (F.col("n_i") + F.col("n_j") - F.col("c"))
-    exact = common.filter(jac >= 0.7).select(
-        "i", "j", F.lit(1).alias("in_exact"), F.lit(0).alias("in_lsh")
-    )
-    lsh = minhash_pairs(spark, sf_dir).select(
-        "i", "j", F.lit(0).alias("in_exact"), F.lit(1).alias("in_lsh")
-    )
-    per = (
-        exact.unionByName(lsh)
-        .groupBy("i", "j")
-        .agg(
-            F.max("in_exact").alias("in_exact"),
-            F.max("in_lsh").alias("in_lsh"),
-        )
-    )
-    agg = per.agg(
-        F.coalesce(F.sum("in_exact"), F.lit(0)).cast("long").alias("n_exact"),
-        F.coalesce(F.sum("in_lsh"), F.lit(0)).cast("long").alias("n_lsh"),
-        F.coalesce(F.sum(F.col("in_exact") * F.col("in_lsh")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
-    )
-    recall = F.round(
-        F.try_divide(
-            F.col("n_common").cast("double"),
-            F.nullif(F.col("n_exact"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(
-            (F.col("n_exact") == 0)
-            | (
-                F.col("n_common")
-                >= F.lit(_D03R_RECALL_GATE) * F.col("n_exact")
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return agg.select(
-        "n_exact", "n_lsh", "n_common", recall.alias("recall"), ok.alias("ok")
+    return _recall(
+        common.filter(jac >= 0.7), minhash_pairs(spark, sf_dir),
+        ["i", "j"], "lsh", _D03R_RECALL_GATE,
     )
 
 
@@ -2581,17 +2436,7 @@ def _d13_oracle() -> str:
     from quacfka_spark.operators.text import PUNCT_CLASS, STOPWORDS
 
     return f"""
-    WITH RECURSIVE
-    pairs AS (SELECT i, j FROM ({_D03_ORACLE})),
-    e AS (SELECT i AS a, j AS b FROM pairs
-          UNION SELECT j AS a, i AS b FROM pairs),
-    reach(a, b) AS (
-      SELECT a, b FROM e
-      UNION
-      SELECT r.a, e2.b FROM reach r JOIN e e2 ON e2.a = r.b),
-    lbl AS (
-      SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-      FROM reach GROUP BY a),
+    WITH RECURSIVE {_components_oracle(_D03_ORACLE, "doc_id", "cluster_id")},
     m AS (
       SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars,

@@ -1202,69 +1202,32 @@ def sim10wx_wideband_agreement(
     """Single-pass union-with-marker shape (d07x/d07wx): each graph's
     pipeline evaluates once; certification key, fixture-scale by role
     — at 100 TB the same statement runs on a sampled stratum."""
-    base = knn_edges(spark, sf_dir).select(
-        "i", "j", F.lit(1).alias("in_base"), F.lit(0).alias("in_w"),
-        F.lit(0).alias("in_r"),
-    )
-    wide = knn_edges(spark, sf_dir, bits=6).select(
-        "i", "j", F.lit(0).alias("in_base"), F.lit(1).alias("in_w"),
-        F.lit(0).alias("in_r"),
-    )
-    rec = knn_edges(
-        spark, sf_dir, bits=6, bands=_SIM10WX_REC_BANDS
-    ).select(
-        "i", "j", F.lit(0).alias("in_base"), F.lit(0).alias("in_w"),
-        F.lit(1).alias("in_r"),
-    )
-    per = (
-        base.unionByName(wide)
-        .unionByName(rec)
-        .groupBy("i", "j")
-        .agg(
-            F.max("in_base").alias("in_base"),
-            F.max("in_w").alias("in_w"),
-            F.max("in_r").alias("in_r"),
-        )
+    from quacfka_spark.operators.dedup import _n, _ok, _overlap, _ratio
+
+    per = _overlap(
+        ["i", "j"],
+        {
+            "base": knn_edges(spark, sf_dir).select("i", "j"),
+            "w": knn_edges(spark, sf_dir, bits=6).select("i", "j"),
+            "r": knn_edges(
+                spark, sf_dir, bits=6, bands=_SIM10WX_REC_BANDS
+            ).select("i", "j"),
+        },
     )
     agg = per.agg(
-        F.coalesce(F.sum("in_base"), F.lit(0)).cast("long").alias("n_base"),
-        F.coalesce(F.sum(F.col("in_base") * F.col("in_w")), F.lit(0))
-        .cast("long")
-        .alias("n_w"),
-        F.coalesce(F.sum(F.col("in_base") * F.col("in_r")), F.lit(0))
-        .cast("long")
-        .alias("n_r"),
+        _n("in_base").alias("n_base"),
+        _n(F.col("in_base") * F.col("in_w")).alias("n_w"),
+        _n(F.col("in_base") * F.col("in_r")).alias("n_r"),
     )
-    agree_w = F.round(
-        F.try_divide(
-            F.col("n_w").cast("double"),
-            F.nullif(F.col("n_base"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    agree_r = F.round(
-        F.try_divide(
-            F.col("n_r").cast("double"),
-            F.nullif(F.col("n_base"), F.lit(0)).cast("double"),
-        ),
-        4,
-    )
-    ok = (
-        F.when(
-            (F.col("n_base") == 0)
-            | (
-                (F.col("n_w") >= F.lit(_SIM10WX_GATE_WIDE) * F.col("n_base"))
-                & (F.col("n_r") >= F.lit(_SIM10WX_GATE_REC) * F.col("n_base"))
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
+    ok = (F.col("n_base") == 0) | (
+        (F.col("n_w") >= F.lit(_SIM10WX_GATE_WIDE) * F.col("n_base"))
+        & (F.col("n_r") >= F.lit(_SIM10WX_GATE_REC) * F.col("n_base"))
     )
     return agg.select(
         "n_base", "n_w", "n_r",
-        agree_w.alias("agree_wide"), agree_r.alias("agree_rec"),
-        ok.alias("ok"),
+        _ratio("n_w", "n_base").alias("agree_wide"),
+        _ratio("n_r", "n_base").alias("agree_rec"),
+        _ok(ok).alias("ok"),
     )
 
 
@@ -1630,6 +1593,8 @@ def _sim10qx_oracle() -> str:
     "each side stays internally consistent.",
 )
 def sim10qx_int8_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from quacfka_spark.operators.dedup import _n, _ok
+
     B = _SIM10QX_FLIP_BOUNDARY
     D = _SIM10QX_DELTA_BOUNDARY
     f = knn_edges(spark, sf_dir).select(
@@ -1669,25 +1634,12 @@ def sim10qx_int8_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1),
     ).otherwise(F.lit(0))
     agg = ed.agg(
-        F.coalesce(F.sum(in_f.cast("int")), F.lit(0))
-        .cast("long")
-        .alias("n_f32"),
-        F.coalesce(F.sum(in_q.cast("int")), F.lit(0))
-        .cast("long")
-        .alias("n_int8"),
-        F.coalesce(F.sum((in_f & in_q).cast("int")), F.lit(0))
-        .cast("long")
-        .alias("n_common"),
-        F.coalesce(
-            F.sum(
-                (in_f & in_q & (F.col("rnk_f") != F.col("rnk_q"))).cast(
-                    "int"
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("rank_flips"),
+        _n(in_f.cast("int")).alias("n_f32"),
+        _n(in_q.cast("int")).alias("n_int8"),
+        _n((in_f & in_q).cast("int")).alias("n_common"),
+        _n(
+            (in_f & in_q & (F.col("rnk_f") != F.col("rnk_q"))).cast("int")
+        ).alias("rank_flips"),
         F.round(
             F.coalesce(
                 F.max(
@@ -1700,19 +1652,12 @@ def sim10qx_int8_rank_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             4,
         ).alias("max_delta"),
-        F.coalesce(F.sum(far), F.lit(0)).cast("long").alias("far_flips"),
+        _n(far).alias("far_flips"),
     )
-    ok = (
-        F.when(
-            (F.col("far_flips") == 0) & (F.col("max_delta") <= F.lit(D)),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
+    ok = (F.col("far_flips") == 0) & (F.col("max_delta") <= F.lit(D))
     return agg.select(
         "n_f32", "n_int8", "n_common", "rank_flips", "max_delta",
-        "far_flips", ok.alias("ok"),
+        "far_flips", _ok(ok).alias("ok"),
     )
 
 
@@ -2023,19 +1968,11 @@ def sim12_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sim13_oracle() -> str:
+    from quacfka_spark.operators.dedup import _components_oracle
+
     knn = _sim10_oracle(order_by=False)
     return f"""
-    WITH RECURSIVE
-    pairs AS (SELECT i, j FROM ({knn})),
-    e AS (SELECT i AS a, j AS b FROM pairs
-          UNION SELECT j AS a, i AS b FROM pairs),
-    reach(a, b) AS (
-      SELECT a, b FROM e
-      UNION
-      SELECT r.a, e2.b FROM reach r JOIN e e2 ON e2.a = r.b),
-    lbl AS (
-      SELECT a AS vec_id, LEAST(a, MIN(b)) AS community
-      FROM reach GROUP BY a)
+    WITH RECURSIVE {_components_oracle(knn, "vec_id", "community")}
     SELECT l.vec_id, l.community,
            COUNT(*) OVER (PARTITION BY l.community) AS community_size
     FROM lbl l ORDER BY l.vec_id
@@ -2052,7 +1989,8 @@ def _sim13_oracle() -> str:
     "member) and community size — the cluster handle for "
     "SemDeDup-style pruning and per-community quota sampling. "
     "Completes the graph stack: sim10 construction, sim11 centrality, "
-    "sim13 communities.",
+    "sim13 communities. Oracle: the shared min-label recursive CTE "
+    "(dedup._components_oracle) over the sim10 oracle's edges.",
 )
 def sim13_knn_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale design (100 TB): edges come from knn_edges (the pinned

@@ -74,3 +74,52 @@ def test_all_queries_survive_empty_corpus(spark, empty_dir):
         except Exception as e:  # collect every offender, then report
             fails[name] = str(e).splitlines()[0][:120]
     assert fails == {}, fails
+
+
+def _counts(*names: str) -> dict:
+    return {n: 0 for n in names}
+
+
+# The exact single row each certification key gives on the 0-row corpus:
+# counts read 0 (not NULL), ratios over an empty denominator read NULL,
+# and every gate passes. The DuckDB parity suite never runs these keys on
+# an empty input, so this pins the coalesce / nullif behaviour of their
+# shared set-overlap core (dedup._overlap, _n, _ratio, _ok).
+_RECALL_EMPTY = {"recall": None, "ok": 1}
+CERT_EMPTY = {
+    "d03x_minhash_xxhash": {"ok": 1},
+    "d03g_neardup_gate_quality": {
+        **_counts("n_gate", "n_verified", "n_common", "n_union_only"),
+        "precision": None, "recall": None, "ok": 1,
+    },
+    "d07qx_int8_agreement": {
+        **_counts("n_f32", "n_int8", "n_common"),
+        "agreement": None, "far_flips": 0, "ok": 1,
+    },
+    "d07x_lsh_recall": {**_counts("n_exact", "n_d07", "n_common"), **_RECALL_EMPTY},
+    "d07wx_recovered_recall": {
+        **_counts("n_exact", "n_rec", "n_common"), **_RECALL_EMPTY,
+    },
+    "d10x_semdedup_recall": {
+        **_counts("n_exact", "n_d10", "n_common"), **_RECALL_EMPTY,
+    },
+    "d03r_minhash_recall": {**_counts("n_exact", "n_lsh", "n_common"), **_RECALL_EMPTY},
+    "sim10wx_wideband_agreement": {
+        **_counts("n_base", "n_w", "n_r"),
+        "agree_wide": None, "agree_rec": None, "ok": 1,
+    },
+    "sim10qx_int8_rank_stability": {
+        **_counts("n_f32", "n_int8", "n_common", "rank_flips"),
+        "max_delta": 0.0, "far_flips": 0, "ok": 1,
+    },
+}
+
+
+@pytest.mark.parametrize("name", sorted(CERT_EMPTY))
+def test_certification_keys_pin_their_empty_corpus_row(spark, empty_dir, name):
+    rows = get_queries()[name](spark, empty_dir).collect()
+
+    def typed(d: dict) -> list:
+        return [(k, v, type(v).__name__) for k, v in d.items()]
+
+    assert [typed(r.asDict()) for r in rows] == [typed(CERT_EMPTY[name])]
